@@ -639,16 +639,17 @@ object Search {
   )
 
   // ───────────────── ON-DISK SEARCH INDEX ─────────────────
-  // The disk-lifecycle template's third instance: the lexical
-  // retrieval state (postings + doc lengths + corpus stats) persists
-  // as a parquet dataset whose postings are PARTITIONED BY TERM-HASH
-  // BUCKET — a query's terms resolve to <= |terms| bucket literals at
-  // plan time, so the serve scan lists only those directory families
-  // (the PartitionFilters guarantee q182's probed cells established),
-  // and the term equality pushes into the parquet scan within them.
-  // At 100 TB the postings list is the big artifact; reading
-  // |query terms|/nBuckets of it per query — independent of corpus
-  // size — is the difference between a search index and a table scan.
+  // The lexical retrieval state (postings + doc lengths + corpus
+  // stats) persists as a parquet dataset whose postings are
+  // PARTITIONED BY TERM-HASH BUCKET — a query's terms resolve to
+  // <= |terms| bucket literals at plan time, so the serve scan lists
+  // only those directory families (the PartitionFilters guarantee
+  // q182's probed cells established), and the term equality pushes
+  // into the parquet scan within them. At 100 TB the postings list is
+  // the big artifact; reading |query terms|/nBuckets of it per query —
+  // independent of corpus size — is the difference between a search
+  // index and a table scan. The lifecycle is [[Stores.StoreFamily]]'s,
+  // over [[SearchFamily]].
 
   private[operators] val SearchTokenizer = "whitespace"
 
@@ -667,79 +668,199 @@ object Search {
     * state to reconcile them. */
   private val SearchTombSchema = "doc_id BIGINT, dl INT"
 
-  /** The search store's per-GENERATION artifacts (see
-    * [[Stores.currentGen]]): everything a compact republishes
-    * atomically under the next generation — the two datasets, the
-    * stats sidecar they must agree with, and the tombstone set the
-    * compact folds in. The manifest, ingest ledger and corpus-version
-    * stamp are store-life state and stay unversioned. */
-  private[graft] val SearchGenKinds =
-    Seq("postings", "docs", "stats", "tombstones")
+  /** The search store family: postings (doc_id, term, tf) partitioned
+    * by term-hash bucket `bkt`, per-doc lengths (doc_id, dl) and the
+    * per-generation (n_docs, sum_dl) stats sidecar, all republished
+    * atomically by a compact together with the (doc_id, dl) tombstone
+    * set it folds in. The manifest (bucket count + tokenizer), ingest
+    * ledger and corpus-version stamp are store-life state. */
+  private[graft] object SearchFamily extends Stores.StoreFamily(
+      name = "searchIndex",
+      genKinds = Seq("postings", "docs", "stats", "tombstones"),
+      datasets = Seq("postings", "docs"), partCol = "bkt",
+      idCol = "doc_id") {
+
+    def partitions(s: SparkSession, dir: String): Int =
+      checkSearchManifest(s, dir)
+
+    def schema(kind: String): String =
+      if (kind == "postings") SearchPostingsSchema else SearchDocsSchema
+
+    override def tombSchema: String = SearchTombSchema
+
+    /** Live rows minus the tombstones — hinted through
+      * [[Stores.scaleHint]], since compaction runs inside one-partition
+      * bootstraps too. */
+    def liveRows(s: SparkSession, dir: String, g: Long,
+        kind: String): DataFrame =
+      tombIds(s, dir, g).map(Stores.scaleHint).fold(read(s, dir, kind, g))(
+        t => read(s, dir, kind, g).join(t, Seq("doc_id"), "left_anti"))
+
+    /** Tombstones are (doc_id, dl), dl looked up from `docs/` NOW so
+      * serves subtract the deleted docs from the corpus-global stats by
+      * aggregating the small tombstone set (see [[SearchTombSchema]]).
+      * Ids already tombstoned (or absent from the store) are skipped,
+      * so a retried delete cannot double-subtract the stats correction
+      * — the one way this family's delete is STRICTER than the others'
+      * (whose anti-join semantics forgive duplicates for free).
+      * Operator-sized (Seq) deletes broadcast the id set and collapse
+      * the lookup onto one task; frame deletes keep the docs scan
+      * parallel (the novelty anti-join and the docs semi-join are keyed
+      * joins left to AQE — a compliance batch can be corpus-scale) and
+      * funnel to one tombstone file only at the write. */
+    override def tombstoneRows(s: SparkSession, dir: String, g: Long,
+        fresh: DataFrame, operatorSized: Boolean): DataFrame = {
+      val novel0 = tombIds(s, dir, g).fold(fresh)(t =>
+        fresh.join(t, Seq("doc_id"), "left_anti"))
+      val novel = if (operatorSized) broadcast(novel0) else novel0
+      val looked = read(s, dir, "docs", g)
+        .join(novel, Seq("doc_id"), "left_semi")
+      if (operatorSized) looked.coalesce(1) else looked.repartition(1)
+    }
+
+    /** The compact rewrite with the search extras: the new stats are
+      * re-derived from the new docs (observed on their write — see
+      * [[observedStats]]), and postings keep only rows whose doc
+      * survives in the compacted docs, restoring `postings ⊆ docs`. A
+      * crash inside [[searchIndexAppend]] can leave ORPHANED postings
+      * (rows whose doc never reached docs/) — they cannot rank (the
+      * serve's dl join drops them) but they inflate the affected terms'
+      * df, and a delete cannot tombstone an id docs/ has never seen; the
+      * documented append-crash repair (delete the landed delta ids +
+      * compact) therefore reclaims BOTH halves of the wreckage. */
+    override def rewrite(s: SparkSession, dir: String, g: Long, ng: Long,
+        n: Int): Unit = {
+      val liveDocs = liveRows(s, dir, g, "docs")
+      writeParts(liveRows(s, dir, g, "postings")
+          .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select("doc_id", "term", "tf", "bkt"),
+        at(dir, "postings", ng), n, "overwrite")
+      val obs = org.apache.spark.sql.Observation()
+      observeStats(liveDocs, obs)
+        .write.mode("overwrite").parquet(at(dir, "docs", ng))
+      val (nDocs, sdl) = observedStats(s, obs, at(dir, "docs", ng))
+      writeSearchStats(s, dir, ng, nDocs, sdl)
+    }
+
+    /** Per-bucket (bkt, n_postings, n_terms, files): live posting rows
+      * and distinct terms plus parquet files per bucket directory.
+      * n_terms is the skew lens: term-hash bucketing is static, so a
+      * pathologically hot bucket argues for a rebuild at a higher
+      * bucket count, and this report is where that shows. */
+    override def stats(s: SparkSession, dir: String): DataFrame = {
+      val g = Stores.currentGen(s, dir)
+      lazy val raw = read(s, dir, "postings", g)
+      withFiles(s, dir, g, tombIds(s, dir, g)
+          .fold(raw)(t => raw.join(broadcast(t), Seq("doc_id"), "left_anti"))
+          .groupBy("bkt").agg(count(lit(1)).as("rows"),
+            countDistinct(col("term")).as("terms")))
+        .select(col("bkt"),
+          coalesce(col("rows"), lit(0L)).as("n_postings"),
+          coalesce(col("terms"), lit(0L)).as("n_terms"), col("files"))
+        .orderBy("bkt")
+    }
+
+    val dupChecks: Seq[Stores.DupCheck] = Seq(Stores.DupCheck("docs",
+      Seq("doc_id"), None, "dup-ids", "ids",
+      s"report-only: ${Stores.ReplayRepair}"))
+
+    val appendRepair: String = Stores.ReplayRepair
+
+    /** stats ≡ agg(docs/) — the append's crash-after-docs window,
+      * re-derived; orphaned postings — the crash-before-docs window,
+      * compacted away (`postings ⊆ docs` restored). */
+    override def fsckExtras(s: SparkSession, dir: String, g: Long,
+        execute: Boolean): Seq[Stores.FsckRow] = {
+      val (n, sdl) = docsAggStats(s, at(dir, "docs", g))
+      val stale = Stores.readMetaSidecar(s, at(dir, "stats", g))
+        .forall(st => st("n_docs").toLong != n || st("sum_dl").toLong != sdl)
+      if (stale && execute) writeSearchStats(s, dir, g, n, sdl)
+      val orphans = read(s, dir, "postings", g)
+        .join(read(s, dir, "docs", g).select("doc_id"), Seq("doc_id"),
+          "left_anti")
+        .count()
+      if (orphans > 0 && execute) compact(s, dir)
+      Seq(
+        if (!stale) ("stats", "consistent", "none")
+        else ("stats", "stale (≠ agg over docs/)",
+          if (execute) "re-derived from docs/" else "would re-derive"),
+        if (orphans == 0) ("orphan-postings", "none", "none")
+        else ("orphan-postings", s"$orphans rows (doc never landed)",
+          if (execute) "compacted (postings ⊆ docs restored)"
+          else "would compact"))
+    }
+
+    override def appendDocs(pinned: DataFrame, dir: String, idCol: String,
+        textCol: String, vecCol: String): Unit =
+      searchIndexAppendPinned(pinned, dir, idCol, textCol)
+  }
 
   /** Write the search index: postings (doc_id, term, tf) bucketed by
     * term hash under `postings/bkt=<b>/…`, per-doc lengths under
-    * `docs/`, the (n_docs, sum_dl) corpus stats under `stats/`
-    * (OBSERVED on the docs write action itself — the metrics row is
-    * collected from exactly the task set whose files the commit
-    * publishes, so the stats can never disagree with the lengths the
-    * scorer joins; a missed observation falls back to the read-back
-    * aggregate, see [[observedStats]]), and a manifest (bucket count +
-    * tokenizer) every serve validates. `nBuckets` sizes the pruning
-    * granularity: a serve reads ~|query terms|/nBuckets of the
-    * postings, so grow it with the corpus (the default suits the test
-    * corpus; a web-scale index wants thousands).
+    * `docs/`, the (n_docs, sum_dl) corpus stats sidecar (OBSERVED on
+    * the docs write action itself — the metrics row is collected from
+    * exactly the task set whose files the commit publishes, so the
+    * stats can never disagree with the lengths the scorer joins; a
+    * missed observation falls back to the read-back aggregate, see
+    * [[observedStats]]), and a manifest (bucket count + tokenizer)
+    * every serve validates. `nBuckets` sizes the pruning granularity:
+    * a serve reads ~|query terms|/nBuckets of the postings, so grow it
+    * with the corpus (the default suits the test corpus; a web-scale
+    * index wants thousands).
     *
-    * Caller contract (the [[dedupIndexAppend]] rule, stated here too —
-    * r15 advice): `docs` ids must be UNIQUE. A repeated id doubles its
-    * rows in docs/ and postings/, inflating n_docs, sum_dl and its own
-    * tf with no error — exact-dedup the frame first (q40) if unsure.
-    *
-    * Rebuild-safe: stale state from a prior store life under the same
-    * dir (every dataset generation + the gen pointer, tombstones, the
-    * ingest ledger) is cleared — the [[Similarity.ivfPqIndexWrite]]
-    * rebuild rule, third instance. */
+    * Caller contract: `docs` ids must be UNIQUE. A repeated id doubles
+    * its rows in docs/ and postings/, inflating n_docs, sum_dl and its
+    * own tf with no error — exact-dedup the frame first (q40) if
+    * unsure. Rebuild-safe ([[Stores.StoreFamily.write]]). */
   private[graft] def searchIndexWrite(docs: DataFrame, outDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       nBuckets: Int = 8): Unit = {
     require(nBuckets >= 1, "searchIndexWrite: nBuckets must be >= 1")
     val s = docs.sparkSession
-    Stores.withStoreLock(s, outDir, "searchIndexWrite") {
-    Stores.clearStoreLife(s, outDir, SearchGenKinds)
-    Stores.writeMetaSidecar(s, s"$outDir/manifest",
-      Seq("n_buckets" -> nBuckets.toString, "tokenizer" -> SearchTokenizer))
-    val ws = split(col(textCol), " ")
-    val obs = org.apache.spark.sql.Observation()
-    // docs (+ its observed stats sidecar) and postings are disjoint
-    // datasets derived from the same input — their two write jobs run
-    // CONCURRENTLY (r22, Stores.inParallel): the rebuild-safe initial
-    // write has no cross-artifact ordering (a torn write of either
-    // half is the same re-run-the-write repair; fsck classifies both)
-    Stores.inParallel(s)(
-      {
-        docs.select(col(idCol).cast("long").as("doc_id"),
-            size(ws).as("dl"))
-          .observe(obs, count(lit(1)).cast("long").as("n"),
-            coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-          .write.mode("overwrite").parquet(s"$outDir/docs")
-        val (n0, sdl0) = observedStats(s, obs, s"$outDir/docs")
-        writeSearchStats(s, outDir, 0L, n0, sdl0)
-      },
-      docs.select(col(idCol).cast("long").as("doc_id"),
-          explode(ws).as("term"))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).cast("int").as("tf"))
-        .withColumn("bkt",
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-        // one write task per bucket: each partition directory gets one
-        // file instead of (shuffle.partitions x nBuckets) shards
-        .repartition(nBuckets, col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$outDir/postings"))
-    // fresh corpus-version stamp (see [[Stores]]): a rebuild starts a
-    // new coordination epoch at 0
-    Stores.writeStoreVersion(s, outDir, 0L)
+    SearchFamily.write(s, outDir, Seq("n_buckets" -> nBuckets.toString,
+        "tokenizer" -> SearchTokenizer)) {
+      val obs = org.apache.spark.sql.Observation()
+      // docs (+ its observed stats sidecar) and postings are disjoint
+      // datasets derived from the same input — their two write jobs run
+      // CONCURRENTLY (Stores.inParallel): the rebuild-safe initial
+      // write has no cross-artifact ordering (a torn write of either
+      // half is the same re-run-the-write repair; fsck classifies both)
+      Stores.inParallel(s)(
+        {
+          observeStats(docLengthsOf(docs, idCol, textCol), obs)
+            .write.mode("overwrite").parquet(s"$outDir/docs")
+          val (n0, sdl0) = observedStats(s, obs, s"$outDir/docs")
+          writeSearchStats(s, outDir, 0L, n0, sdl0)
+        },
+        SearchFamily.writeParts(postingsOf(docs, idCol, textCol, nBuckets),
+          s"$outDir/postings", nBuckets, "overwrite"))
     }
   }
+
+  /** The (doc_id, term, tf, bkt) postings of an (idCol, textCol) frame:
+    * whitespace tokens, tf per (doc, term), `bkt` the term-hash bucket
+    * [[termBucket]] computes driver-side. */
+  private def postingsOf(docs: DataFrame, idCol: String, textCol: String,
+      nBuckets: Int): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+        explode(split(col(textCol), " ")).as("term"))
+      .groupBy("doc_id", "term")
+      .agg(count(lit(1)).cast("int").as("tf"))
+      .withColumn("bkt",
+        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+
+  /** The (doc_id, dl) doc lengths of an (idCol, textCol) frame. */
+  private def docLengthsOf(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+      size(split(col(textCol), " ")).as("dl"))
+
+  /** `docs` (doc_id, dl) with its (n, Σdl) observed on `obs` by the
+    * action that writes it. */
+  private def observeStats(docs: DataFrame,
+      obs: org.apache.spark.sql.Observation): DataFrame =
+    docs.observe(obs, count(lit(1)).cast("long").as("n"),
+      coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
 
   /** Append a DELTA of docs to an existing index under its frozen
     * bucket geometry (read from the manifest, never assumed). The
@@ -747,18 +868,17 @@ object Search {
     * stats = stored one-row stats + the delta's own (count, Σdl)
     * aggregate — EXACT, not approximate, because count and sum are
     * associative, so the invariant `stats ≡ agg(docs/)` holds at every
-    * rest point by induction from the write's read-back derivation.
-    * The incremental form is the 100 TB requirement, not a shortcut:
-    * an append (and every streaming micro-batch riding it) costs
-    * O(|delta|) + two one-row jobs, independent of how much corpus the
-    * index has absorbed — a full docs/ re-scan per batch would grow
-    * linearly with index age. [[searchIndexWrite]] and
-    * [[searchIndexCompact]] remain the full re-derivation points (the
-    * self-healing resets of the induction base). Per-term df needs no
-    * reconciliation at all: the serve counts df from the pruned
-    * postings themselves (a postings row exists iff tf > 0), so
-    * appended postings ARE the df update. Spec-pinned: append(old,
-    * delta) serves identically to a full rebuild over old ∪ delta.
+    * rest point by induction from the write's derivation. The
+    * incremental form is the 100 TB requirement, not a shortcut: an
+    * append (and every streaming micro-batch riding it) costs
+    * O(|delta|), independent of how much corpus the index has absorbed
+    * — a full docs/ re-scan per batch would grow linearly with index
+    * age. [[searchIndexWrite]] and [[searchIndexCompact]] remain the
+    * full re-derivation points. Per-term df needs no reconciliation at
+    * all: the serve counts df from the pruned postings themselves (a
+    * postings row exists iff tf > 0), so appended postings ARE the df
+    * update. Spec-pinned: append(old, delta) serves identically to a
+    * full rebuild over old ∪ delta.
     *
     * Caller contract: delta ids must be NEW (the [[searchIndexWrite]]
     * unique-id rule across lives). Crash honesty: the three writes
@@ -766,24 +886,19 @@ object Search {
     * dying after only the postings leaves ORPHANED rows (unrankable,
     * since the serve's dl join drops them, but transiently inflating
     * the affected terms' df); dying after the docs leaves the delta
-    * counted-but-stats-stale. The one repair covers every window:
+    * counted-but-stats-stale. Either way the append's pending marker
+    * stays and fsck reports it. The one repair covers every window:
     * [[searchIndexDelete]] of the delta ids that reached docs/ +
-    * [[searchIndexCompact]] (which also reclaims orphans — it keeps
-    * only postings whose doc survives), then re-append — the same
-    * at-least-once window and repair as [[searchIndexIngest]]. */
+    * [[searchIndexCompact]] (which also reclaims orphans), then
+    * re-append — [[Stores.replayRepair]] runs it given the batch.
+    *
+    * The delta is pinned ONCE: the three derivations inside (stats
+    * delta, postings, docs) would otherwise re-evaluate the caller's
+    * frame, and a non-deterministic input could make the written rows
+    * diverge from the stats delta. The pin is released once the
+    * append's writes have materialized. */
   private[graft] def searchIndexAppend(docs: DataFrame, indexDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // Pin the delta ONCE (r16 advice): the three derivations inside
-    // (stats delta, postings, docs) would otherwise re-evaluate the
-    // caller's frame, and a non-deterministic input (sample/limit, a
-    // re-read mutating source, rand-derived ids) could make the
-    // written rows diverge from the stats delta — silently breaking
-    // the stats ≡ agg(docs/) invariant the serve depends on.
-    // localCheckpoint is eager and O(|delta|), within the append's
-    // cost contract (and it spares the delta plan two re-executions).
-    // The pin is RELEASED once the append's writes have materialized
-    // — checkpoint blocks are invisible to the release ledger and
-    // before r18 stayed resident for the session (r17 footprint tail).
     val pinned = docs.localCheckpoint()
     try searchIndexAppendPinned(pinned, indexDir, idCol, textCol)
     finally
@@ -799,351 +914,91 @@ object Search {
       indexDir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val s = pinned.sparkSession
-    Stores.withStoreLock(s, indexDir, "searchIndexAppend") {
-    val nBuckets = checkSearchManifest(s, indexDir)
-    val g = Stores.currentGen(s, indexDir)
-    val ws = split(col(textCol), " ")
-    // one-row reads BEFORE the appends, so a crash mid-append can only
-    // leave stats BEHIND the data (under-counting the delta — the
-    // documented repair window), never double-counting it
-    val old = readSearchStats(s, indexDir, g)
-    pinned.select(col(idCol).cast("long").as("doc_id"),
-        explode(ws).as("term"))
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("int").as("tf"))
-      .withColumn("bkt",
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-      // the WRITE's one-file-per-bucket discipline, not a bare column
-      // repartition (r16 verdict): each append lands at most one file
-      // per touched bucket, so ingest fragments accrete per-batch ×
-      // buckets-touched instead of × shuffle.partitions — compaction
-      // still reclaims, but the leak between compacts is bounded
-      .repartition(nBuckets, col("bkt"))
-      .write.mode("append").partitionBy("bkt")
-      .parquet(s"$indexDir/${Stores.genName("postings", g)}")
-    // the delta's (count, Σdl) rides the docs append itself as an
-    // observed metric (one job where the r18 form ran a separate
-    // delta aggregate before the writes — the r18 verdict's shared-
-    // action coalescing): the observation measures exactly the rows
-    // the commit publishes, so `stats ≡ agg(docs/)` still holds at
-    // every rest point, and a crash anywhere before the stats write
-    // still leaves stats BEHIND the data (never ahead)
-    val obs = org.apache.spark.sql.Observation()
-    pinned.select(col(idCol).cast("long").as("doc_id"),
-        size(ws).as("dl"))
-      .observe(obs, count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-      .write.mode("append")
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}")
-    Stores.awaitObserved(s, obs) match {
-      case Some(r) => writeSearchStats(s, indexDir, g,
-        old._1 + r.getLong(0), old._2 + r.getLong(1))
-      case None =>
-        // observation never fired (a non-SQL execution path would be
-        // the only way) — fall back to the FULL re-derivation, which
-        // is strictly more authoritative than old + delta
-        val (n, sdl) = docsAggStats(s,
-          s"$indexDir/${Stores.genName("docs", g)}")
-        writeSearchStats(s, indexDir, g, n, sdl)
-    }
-    Stores.bumpStoreVersion(s, indexDir)
+    SearchFamily.append(s, indexDir) { (g, nBuckets) =>
+      // one-row read BEFORE the appends, so a crash mid-append can only
+      // leave stats BEHIND the data (under-counting the delta — the
+      // documented repair window), never double-counting it
+      val old = readSearchStats(s, indexDir, g)
+      SearchFamily.writeParts(postingsOf(pinned, idCol, textCol, nBuckets),
+        SearchFamily.at(indexDir, "postings", g), nBuckets, "append")
+      // the delta's (count, Σdl) rides the docs append itself as an
+      // observed metric: the observation measures exactly the rows the
+      // commit publishes, so `stats ≡ agg(docs/)` still holds at every
+      // rest point, and a crash anywhere before the stats write still
+      // leaves stats BEHIND the data (never ahead)
+      val obs = org.apache.spark.sql.Observation()
+      val docsAt = SearchFamily.at(indexDir, "docs", g)
+      observeStats(docLengthsOf(pinned, idCol, textCol), obs)
+        .write.mode("append").parquet(docsAt)
+      // an observation that never fires falls back to the FULL
+      // re-derivation, strictly more authoritative than old + delta
+      val (n, sdl) = Stores.awaitObserved(s, obs)
+        .fold(docsAggStats(s, docsAt))(r =>
+          (old._1 + r.getLong(0), old._2 + r.getLong(1)))
+      writeSearchStats(s, indexDir, g, n, sdl)
     }
   }
 
-  /** LOGICAL delete (takedowns): record (doc_id, dl) tombstones —
-    * dl looked up from the docs sidecar NOW so serves subtract the
-    * deleted docs from the corpus-global stats by aggregating the
-    * small tombstone set, never re-scanning docs/ per query (see
-    * [[SearchTombSchema]]). Serving subtracts immediately;
-    * [[searchIndexCompact]] reclaims the space. Idempotent: ids
-    * already tombstoned (or absent from the store) are skipped, so a
-    * retried delete cannot double-subtract the stats correction — the
-    * one way this store's delete is STRICTER than the dedup store's
-    * (whose anti-join semantics forgive duplicates for free). */
+  /** LOGICAL delete (takedowns): record (doc_id, dl) tombstones (see
+    * [[SearchFamily.tombstoneRows]]); serving subtracts immediately,
+    * [[searchIndexCompact]] reclaims the space. Idempotent. */
   private[graft] def searchIndexDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "searchIndexDelete: ids must be non-empty")
-    import s.implicits._
-    searchIndexDeleteBody(s, indexDir, ids.distinct.toDF("doc_id"),
-      operatorSized = true)
-  }
+      ids: Seq[Long]): Unit = SearchFamily.delete(s, indexDir, ids)
 
-  /** FRAME-shaped [[searchIndexDelete]] — the no-collect takedown
-    * path ([[Stores.takedownAll]]'s DataFrame form): `ids` carries one
-    * `doc_id`-castable column and never crosses the driver; the
-    * novelty anti-join and the docs semi-join are keyed joins left to
-    * AQE (a compliance batch can be corpus-scale — the Seq form's
-    * broadcast hint would be wrong there), and the tombstone write
-    * repartitions to one file AFTER the join instead of collapsing the
-    * scan onto one task. Identical semantics to the Seq form
-    * (spec-pinned): already-tombstoned and absent ids are skipped, so
-    * a retry cannot double-subtract the stats correction. An empty
-    * frame writes an empty (possibly zero-row) tombstone append —
-    * a no-op for every serve. */
+  /** FRAME-shaped [[searchIndexDelete]] — the no-collect takedown path
+    * ([[Stores.takedownAll]]'s DataFrame form): `ids` carries one
+    * `doc_id`-castable column and never crosses the driver. Identical
+    * semantics to the Seq form (spec-pinned). An empty frame writes an
+    * empty tombstone append — a no-op for every serve. */
   private[graft] def searchIndexDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    // loud long-cast guard (Stores.requireLongIds); no distinct — the
-    // novelty anti-join and the docs semi-join are both duplicate-safe
-    // (left-semi emits each docs row at most once), so normalizing a
-    // corpus-scale batch would shuffle it for no semantic effect.
-    // Pinned (eager localCheckpoint, released once the tombstone write
-    // has materialized — r18 advice): the PUBLIC frame-shaped entry
-    // point must not re-evaluate a non-deterministic caller frame
-    // across its guard and write; internal callers whose ids are
-    // already pinned (takedownAll) take [[searchIndexDeletePinned]].
-    val pinned = Stores.requireLongIds(ids, "doc_id", "searchIndexDelete")
-      .localCheckpoint()
-    try searchIndexDeleteBody(s, indexDir, pinned, operatorSized = false)
-    finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = SearchFamily.delete(s, indexDir, ids)
 
-  /** [[searchIndexDelete]] for an ids frame the CALLER already
-    * validated and pinned (or a pure derivation of a pinned frame —
-    * [[Stores.takedownAll]]'s per-store dispatch, including the chunk
-    * family's packed-range resolution plan): skips the public form's
-    * guard+checkpoint, which would re-materialize the batch once per
-    * store. */
-  private[operators] def searchIndexDeletePinned(s: SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    searchIndexDeleteBody(s, indexDir, ids, operatorSized = false)
-
-  private def searchIndexDeleteBody(s: SparkSession, indexDir: String,
-      fresh: DataFrame, operatorSized: Boolean): Unit = {
-    Stores.withStoreLock(s, indexDir, "searchIndexDelete") {
-    val g = Stores.currentGen(s, indexDir)
-    val tombP = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = tombP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val novel0 =
-      if (!fs.exists(tombP)) fresh
-      else fresh.join(
-        s.read.schema(SearchTombSchema).parquet(tombP.toString)
-          .select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    // operator-sized (Seq) deletes broadcast the id set and collapse
-    // the whole lookup onto one task (the batch is tiny by contract);
-    // frame-shaped deletes keep the docs scan parallel and funnel to
-    // one tombstone file only at the write
-    val novel = if (operatorSized) broadcast(novel0) else novel0
-    val looked = s.read.schema(SearchDocsSchema)
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}")
-      .join(novel, Seq("doc_id"), "left_semi")
-    (if (operatorSized) looked.coalesce(1) else looked.repartition(1))
-      .write.mode("append").parquet(tombP.toString)
-    Stores.bumpStoreVersion(s, indexDir)
-    }
-  }
-
-  /** The live tombstone set (doc_id, dl) at generation `g` — empty
-    * frame when none. Tombstones are GENERATIONAL: a compact folds the
-    * current set into the next generation's datasets and the fresh
-    * generation starts with no tombstone dir at all, while the old
-    * set stays with its (grace) generation for serves pinned to it. */
+  /** The live tombstone set (doc_id, dl) at generation `g` — None
+    * before the first delete; the serve's stats correction reads its
+    * dl column. */
   private def searchTombstones(s: SparkSession, indexDir: String,
-      g: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(s.read.schema(SearchTombSchema).parquet(p.toString))
-  }
+      g: Long): Option[DataFrame] =
+    SearchFamily.tombIds(s, indexDir, g).map(_ => s.read
+      .schema(SearchTombSchema)
+      .parquet(SearchFamily.at(indexDir, "tombstones", g)))
 
-  /** Compact into the NEXT GENERATION: rewrite postings (one file per
-    * bucket) and docs with tombstones applied physically at fresh
-    * `<kind>-g<N+1>` paths, derive the new stats sidecar from the new
-    * docs read back, then COMMIT everything with one atomic `gen`
-    * pointer flip (see [[Stores.currentGen]]) — postings, docs, stats
-    * and the now-empty tombstone set change together or not at all, so
-    * the half-swapped crash window of the old rename-swap layout does
-    * not exist. The pre-compact generation is NOT deleted: it stays as
-    * the serve grace (a serve constructed before the flip keeps
-    * reading its pinned generation's files — snapshot isolation one
-    * generation deep); this compact's vacuum removes the generations
-    * BEFORE it. Crash anywhere pre-flip leaves the store intact plus
-    * torn `-g<N+1>` scratch (fsck deletes it; a re-run overwrites it);
-    * crash post-flip before the vacuum leaves expired generations the
-    * next compact (or fsck) removes.
-    *
-    * PURGE NOTE (takedown compliance): the grace generation still
-    * carries the tombstoned rows' bytes, so the PHYSICAL purge of a
-    * delete completes at the SECOND compact after it — run two
-    * compacts back-to-back when a takedown must leave no bytes behind
-    * (the first folds the tombstones in, the second vacuums the
-    * generation that still holds them).
-    *
-    * Compaction also restores the `postings ⊆ docs` invariant: a
-    * crash inside [[searchIndexAppend]]'s window can leave ORPHANED
-    * postings (rows whose doc never reached docs/) — they cannot rank
-    * (the serve's dl join drops them) but they transiently inflate the
-    * affected terms' df, and [[searchIndexDelete]] cannot tombstone an
-    * id docs/ has never seen. The compact rewrite keeps only postings
-    * whose doc survives in the compacted docs sidecar, so the
-    * documented append-crash repair (delete the landed delta ids +
-    * compact) reclaims BOTH halves of the wreckage (spec-pinned). */
+  /** Compact into the NEXT GENERATION ([[Stores.StoreFamily.compact]]):
+    * postings (one file per bucket) and docs rewritten with tombstones
+    * applied physically, stats re-derived, `postings ⊆ docs` restored
+    * ([[SearchFamily.rewrite]]). */
   private[graft] def searchIndexCompact(s: SparkSession,
-      indexDir: String): Unit =
-      Stores.withStoreLock(s, indexDir, "searchIndexCompact") {
-    val nBuckets = checkSearchManifest(s, indexDir)
-    val g = Stores.currentGen(s, indexDir)
-    val ng = g + 1
-    val tombIds = searchTombstones(s, indexDir, g)
-      .map(t => Stores.scaleHint(t.select("doc_id")))
-    def minusTombs(df: DataFrame): DataFrame =
-      tombIds.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    val liveDocs = minusTombs(s.read.schema(SearchDocsSchema)
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}"))
-    minusTombs(s.read.schema(SearchPostingsSchema)
-        .parquet(s"$indexDir/${Stores.genName("postings", g)}"))
-      .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("doc_id", "term", "tf", "bkt")
-      .repartition(nBuckets, col("bkt"))
-      .write.mode("overwrite").partitionBy("bkt")
-      .parquet(s"$indexDir/${Stores.genName("postings", ng)}")
-    val obs = org.apache.spark.sql.Observation()
-    liveDocs
-      .observe(obs, count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-      .write.mode("overwrite")
-      .parquet(s"$indexDir/${Stores.genName("docs", ng)}")
-    val (n, sdl) = observedStats(s, obs,
-      s"$indexDir/${Stores.genName("docs", ng)}")
-    writeSearchStats(s, indexDir, ng, n, sdl)
-    // THE commit point: generation ng (with its re-derived stats and
-    // empty tombstone set) becomes current atomically
-    Stores.writeGen(s, indexDir, ng)
-    // vacuum everything OLDER than the grace generation g
-    Stores.vacuumGens(s, indexDir, SearchGenKinds, keepFrom = g)
-  }
+      indexDir: String): Unit = SearchFamily.compact(s, indexDir)
 
-  /** Per-bucket health report: (bkt, n_postings, n_terms, files) —
-    * live posting rows and distinct terms (tombstones subtracted) plus
-    * parquet files per bucket directory (the compaction trigger).
-    * Hadoop FS listing is the authoritative bucket set — an
-    * all-tombstoned bucket still reports (0, 0, >0 files). n_terms is
-    * the skew lens the other stores don't need: term-hash bucketing is
-    * static, so a pathologically hot bucket argues for a rebuild at a
-    * higher bucket count, and this report is where that shows. */
+  /** Per-bucket health report: (bkt, n_postings, n_terms, files) — see
+    * [[SearchFamily.stats]]. */
   private[graft] def searchIndexStats(s: SparkSession,
-      indexDir: String): DataFrame = {
-    val g = Stores.currentGen(s, indexDir)
-    val root = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("postings", g)}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
-      s"searchIndexStats: no postings dataset under $indexDir — " +
-        "not a store directory (searchIndexWrite creates postings/)")
-    val tombIds = searchTombstones(s, indexDir, g)
-      .map(t => broadcast(t.select("doc_id")))
-    val live = tombIds.fold(
-        s.read.schema(SearchPostingsSchema).parquet(root.toString))(t =>
-      s.read.schema(SearchPostingsSchema).parquet(root.toString)
-        .join(t, Seq("doc_id"), "left_anti"))
-    val counts = live.groupBy("bkt")
-      .agg(count(lit(1)).as("rows"),
-        countDistinct(col("term")).as("terms"))
-    val files = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bkt="))
-      .map(st => (st.getPath.getName.stripPrefix("bkt=").toInt,
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))))
-      .toSeq
-    import s.implicits._
-    broadcast(files.toDF("bkt", "files"))
-      .join(counts, Seq("bkt"), "left")
-      .select(col("bkt"),
-        coalesce(col("rows"), lit(0L)).as("n_postings"),
-        coalesce(col("terms"), lit(0L)).as("n_terms"), col("files"))
-      .orderBy("bkt")
-  }
+      indexDir: String): DataFrame = SearchFamily.stats(s, indexDir)
 
   /** CONTINUOUS ingestion: each micro-batch of `delta` (idCol, textCol
     * — new ids only) is appended under the frozen bucket geometry,
-    * guarded by the same batch-id LEDGER as the other two stores
-    * (`ingested/batch-<id>/` markers make checkpoint replays skip
-    * already-applied batches — clean stop/restart never
-    * double-appends). Same honest crash window: dying between the
-    * append and its marker replays that batch at-least-once; the
-    * repair is [[searchIndexDelete]] of the duplicate ids +
-    * [[searchIndexCompact]], or a rebuild. Note the stats sidecar is
-    * rewritten per batch (a one-row overwrite — the corpus-global
-    * reconciliation appends force on this store). */
+    * guarded by the batch-id ledger ([[Stores.StoreFamily.ingest]]).
+    * The stats sidecar is rewritten per batch (a one-row overwrite —
+    * the corpus-global reconciliation appends force on this store). */
   private[graft] def searchIndexIngest(delta: DataFrame, indexDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     checkSearchManifest(delta.sparkSession, indexDir)
-    delta.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-        val marker =
-          new org.apache.hadoop.fs.Path(s"$indexDir/ingested/batch-$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            searchIndexAppend(batch, indexDir, idCol, textCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // the next replay would double-append — fail the batch loudly
-          require(fs.mkdirs(marker),
-            s"searchIndexIngest: ledger marker create failed: $marker")
-        }
-        ()
-      }
-      .start()
+    SearchFamily.ingest(delta, indexDir, checkpointDir)(
+      searchIndexAppend(_, indexDir, idCol, textCol))
   }
 
-  /** The store MAINTENANCE POLICY — the decision table the other two
-    * stores carry, on the search store: per bucket, (bkt, n_postings,
-    * files, tomb, action) where action is `compact` when the bucket
-    * directory's file count exceeds `maxFiles` (append/ingest
-    * small-file accretion) or the tombstoned-row share of the bucket
-    * exceeds `maxTombBp` (dead rows every serve still anti-joins
-    * away — and, uniquely here, dead weight in the stats correction),
-    * else `ok`. No retrain action: term-hash bucketing has no trained
+  /** The store MAINTENANCE POLICY ([[Stores.StoreFamily.maintain]]) on
+    * the search store: per bucket, (bkt, n_postings, files, tomb,
+    * action). No retrain action: term-hash bucketing has no trained
     * state; a hot-bucket skew problem shows in [[searchIndexStats]]'s
     * n_terms column and argues for a REBUILD at a higher bucket count,
-    * which is a write, not a maintenance op. `execute = true` runs
-    * [[searchIndexCompact]] when any bucket decides `compact`
-    * (whole-store by construction; serve-identical, spec-pinned). */
+    * which is a write, not a maintenance op. Dead rows here are also
+    * dead weight in the stats correction. */
   private[graft] def searchIndexMaintain(s: SparkSession,
       indexDir: String, maxFiles: Int = 8, maxTombBp: Long = 2000L,
-      execute: Boolean = false): DataFrame = {
-    require(maxFiles >= 1 && maxTombBp >= 0,
-      "searchIndexMaintain: maxFiles >= 1, maxTombBp >= 0")
-    val g = Stores.currentGen(s, indexDir)
-    val raw = s.read.schema(SearchPostingsSchema)
-      .parquet(s"$indexDir/${Stores.genName("postings", g)}")
-    val dead = searchTombstones(s, indexDir, g) match {
-      case None => raw.filter(lit(false))
-      case Some(t) =>
-        raw.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_semi")
-    }
-    val tomb = dead.groupBy("bkt").agg(count(lit(1)).as("tomb"))
-    val report = searchIndexStats(s, indexDir)
-      .join(tomb, Seq("bkt"), "left")
-      .select(col("bkt"), col("n_postings"), col("files"),
-        coalesce(col("tomb"), lit(0L)).as("tomb"))
-      .withColumn("action",
-        when(col("files") > maxFiles
-          || (col("n_postings") + col("tomb") > 0
-            && col("tomb") * 10000L
-               > lit(maxTombBp) * (col("n_postings") + col("tomb"))),
-          "compact").otherwise("ok"))
-      .orderBy("bkt")
-    if (execute) {
-      val decided = report.collect()
-      if (decided.exists(_.getAs[String]("action") == "compact"))
-        searchIndexCompact(s, indexDir)
-      import s.implicits._
-      decided.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-          r.getLong(3), r.getString(4)))
-        .toSeq.toDF("bkt", "n_postings", "files", "tomb", "action")
-    } else report
-  }
+      execute: Boolean = false): DataFrame =
+    SearchFamily.maintain(s, indexDir, maxFiles, maxTombBp, execute)
 
   /** A query term's postings bucket, computed DRIVER-SIDE: the same
     * `pmod(xxhash64(term), nBuckets)` the write path stamps per row,
@@ -1359,16 +1214,22 @@ object Search {
   }
 
   private[graft] def diskSearchDir(s: SparkSession, dir: String): String =
-    diskSearchDirs.computeIfAbsent(dir, _ => {
-      val out = Stores.storeScratchDir(s, "graft-searchidx-q185")
-      // bootstrap shuffles sized from the corpus being indexed (the
-      // CC-loop discipline — see Stores.withBootstrapShuffle): the
-      // build is a chain of small actions whose 32-task stages over
-      // bench-scale data were most of q185's absorbed cost
+    memoBuild(s, dir, diskSearchDirs, "graft-searchidx-q185")(
+      searchIndexWrite(_, _))
+
+  /** Build the memoized search store of corpus `dir` into a fresh
+    * [[Stores.storeScratchDir]] with `write(documents, outDir)`, under
+    * bootstrap shuffles sized from the corpus being indexed (the
+    * CC-loop discipline — see Stores.withBootstrapShuffle): the build
+    * is a chain of small actions whose 32-task stages over bench-scale
+    * data were most of q185's absorbed cost. */
+  private def memoBuild(s: SparkSession, dir: String,
+      memo: java.util.concurrent.ConcurrentHashMap[String, String],
+      prefix: String)(write: (DataFrame, String) => Unit): String =
+    memo.computeIfAbsent(dir, _ => {
+      val out = Stores.storeScratchDir(s, prefix)
       val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s, Seq(docs)) {
-        searchIndexWrite(docs, out)
-      }
+      Stores.withBootstrapShuffle(s, Seq(docs)) { write(docs, out) }
       out
     })
 
@@ -1425,15 +1286,9 @@ object Search {
 
   private[graft] def diskChunkSearchDir(s: SparkSession,
       dir: String): String =
-    diskChunkSearchDirs.computeIfAbsent(dir, _ => {
-      val out = Stores.storeScratchDir(s, "graft-searchidx-q186")
-      val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s, Seq(docs)) {
-        searchIndexWrite(chunkCorpus(docs), out,
-          idCol = "chunk_id", textCol = "chunk_text")
-      }
-      out
-    })
+    memoBuild(s, dir, diskChunkSearchDirs, "graft-searchidx-q186")(
+      (docs, out) => searchIndexWrite(chunkCorpus(docs), out,
+        idCol = "chunk_id", textCol = "chunk_text"))
 
   /** The q170/q186 fusion served off an arbitrary (chunk search index,
     * ANN index) pair — q186 reads the pristine builds, q187 the

@@ -1,16 +1,21 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cross-store coordination for the three on-disk retrieval stores
-  * (ANN `Similarity.ivfPqIndex*`, dedup `TextDedup.dedupIndex*`,
-  * search `Search.searchIndex*`) — the layer a composed serving path
-  * like [[graft.Graft.ragServeDisk]] needs once more than one store
-  * answers the same corpus (r16 verdict "what's missing" #1 and #2).
-  *
-  * Two concerns live here because they are inherently CROSS-store:
+/** The on-disk retrieval stores and the one lifecycle they share. Four
+  * store families persist retrieval state: search
+  * (`Search.searchIndex*`), ANN IVF-PQ (`Similarity.ivfPqIndex*`),
+  * dedup bands (`TextDedup.dedupIndex*`) and audit pairs
+  * (`TextDedup.auditStore*`). Each family is a [[StoreFamily]] spec —
+  * generation kinds, partition column, id column, live-dataset
+  * readers, tombstone rule, manifest check and compact/fsck extras —
+  * and the lifecycle is written once, over the spec: write, append,
+  * Seq/frame/pinned delete, compact, the stats file listing, maintain,
+  * the ledgered streaming ingest and fsck. A composed serving path like
+  * [[graft.Graft.ragServeDisk]] adds the cross-store concerns below
+  * once more than one store answers the same corpus.
   *
   *  1. '''Corpus-version stamps.''' Each store carries a one-line
   *     `corpus-version` sidecar file counting the mutations applied since
@@ -30,21 +35,19 @@ import org.apache.spark.sql.functions._
   *     itself needs, which restores both). A pre-stamp store (no
   *     `corpus-version` file) reads 0, aligning with fresh rebuilds.
   *
-  *  2. '''Executable crash repair''' ([[storeFsck]] and the per-store
-  *     fscks): every crash window in the three stores' lifecycle
-  *     scaladoc — torn compact scratch above the generation pointer,
-  *     expired generations below the grace, the search append's
+  *  2. '''Executable crash repair''' ([[storeFsck]]): every crash
+  *     window of the lifecycle — torn compact scratch above the
+  *     generation pointer, expired generations below the grace, an
+  *     append that never completed, the search append's
   *     orphaned-postings and stale-stats windows — is detectable from
-  *     the directory state alone, and the repairs were previously
-  *     DOCUMENTED but executed by a human reading scaladoc
-  *     mid-incident (r16 verdict missing #2). fsck reads the state,
-  *     classifies the window, and runs the documented repair;
-  *     `execute = false` classifies without touching the store.
-  *     [[replayRepair]] executes the one recovery fsck cannot (it
-  *     needs the source batch).
+  *     the directory state alone. fsck reads the state, classifies the
+  *     window, and runs the documented repair; `execute = false`
+  *     classifies without touching the store. [[replayRepair]]
+  *     executes the one recovery fsck cannot (it needs the source
+  *     batch).
   *
   *  3. '''The single-writer contract, made loud'''
-  *     ([[withStoreLock]]): every physical mutation in the three
+  *     ([[withStoreLock]]): every physical mutation in the four
   *     store families runs under an exclusive per-store
   *     `mutation-lock` sidecar, so a double-launched mutation fails
   *     immediately naming the holder instead of silently interleaving
@@ -228,7 +231,7 @@ object Stores {
     * concurrent materialization (BlockManager serializes per-block
     * compute; the CacheRegistry's putIfAbsent race note).
     *
-    * Discipline mirrored from [[stampAll]]: BOTH branches are awaited
+    * Discipline: BOTH branches are awaited
     * (join-all) before any failure propagates — throwing on the first
     * while the other still runs would let its writes land after a
     * re-run had already started.
@@ -338,10 +341,10 @@ object Stores {
     * filesystem op (measured: the parquet form added ~0.2–0.4 s per
     * mutation to the metered disk-store queries). */
   private[graft] def storeVersion(s: SparkSession, dir: String): Long =
-    readRawLong(s, s"$dir/corpus-version").getOrElse(0L)
+    readText(s, s"$dir/corpus-version").fold(0L)(_.trim.toLong)
 
-  /** Read a one-line numeric sidecar; None when absent. */
-  private def readRawLong(s: SparkSession, path: String): Option[Long] = {
+  /** A raw sidecar file's text; None when absent. */
+  private def readText(s: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val fs = fsOf(s, p)
     if (!fs.exists(p)) None
@@ -349,7 +352,7 @@ object Stores {
       val in = fs.open(p)
       try Some(new String(
           org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
+          java.nio.charset.StandardCharsets.UTF_8))
       finally in.close()
     }
   }
@@ -363,19 +366,20 @@ object Stores {
     * peer store crashed inside the same instant (the re-run of the
     * interrupted mutation restores all stamps either way). */
   private[graft] def writeStoreVersion(s: SparkSession, dir: String,
-      v: Long): Unit = writeRawLong(s, s"$dir/corpus-version", v)
+      v: Long): Unit = writeText(s, s"$dir/corpus-version", v.toString)
 
-  /** Write a one-line numeric sidecar via temp-write + rename. */
-  private def writeRawLong(s: SparkSession, path: String,
-      v: Long): Unit = {
+  /** Replace a raw sidecar file via temp-write + rename, which keeps
+    * the swap atomic on any Hadoop filesystem. */
+  private def writeText(s: SparkSession, path: String,
+      text: String): Unit = {
     val p = new Path(path)
     val tmp = new Path(s"$path-tmp")
     val fs = fsOf(s, p)
     val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"writeRawLong: rename failed for $path")
+    require(fs.rename(tmp, p), s"sidecar rename failed for $path")
   }
 
   /** version := version + 1 — every corpus MUTATION (append, ingested
@@ -452,10 +456,14 @@ object Stores {
   private val GenMarkerPat = "^gen-(\\d+)$".r
 
   /** Torn sidecar temp files a crash inside writeMetaSidecar /
-    * writeRawLong can leave — every raw-sidecar name the three store
-    * families write, with the generational stats variants. */
+    * writeText can leave — every raw-sidecar name the four store
+    * families write, with the generational stats variants and the
+    * pending-append markers. */
   private val SidecarTmpPat =
-    "^(corpus-version|manifest|stats(-g\\d+)?)-tmp$".r
+    "^(corpus-version|manifest|stats(-g\\d+)?|append-pending-[0-9a-f]+)-tmp$".r
+
+  /** A pending-append marker (see [[openPendingAppend]]). */
+  private val PendingAppendPat = "^append-pending-[0-9a-f]+$".r
 
   private def genMarkers(fs: FileSystem, root: Path): Seq[Long] =
     fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
@@ -507,29 +515,29 @@ object Stores {
       fs.delete(new Path(s"$dir/${genName(kind, g)}"), true)
   }
 
-  /** Clear EVERY generation of `kinds`, the commit markers, and the
-    * ingest batch ledger — the rebuild guard of the three writes (a
-    * fresh store life must not inherit a prior life's generations,
-    * pointer, or applied-batch ids; one shared implementation so the
-    * three families' rebuild semantics cannot drift). */
+  /** Clear EVERY generation of `kinds`, the commit markers, the
+    * pending-append markers and the ingest batch ledger — the rebuild
+    * guard of [[StoreFamily.write]]: a fresh store life must not
+    * inherit a prior life's generations, pointer, torn appends or
+    * applied-batch ids. */
   private[graft] def clearStoreLife(s: SparkSession, dir: String,
       kinds: Seq[String]): Unit = {
     val root = new Path(dir)
     val fs = fsOf(s, root)
-    for (kind <- kinds; g <- gensOf(s, dir, kind))
-      fs.delete(new Path(s"$dir/${genName(kind, g)}"), true)
+    vacuumGens(s, dir, kinds, keepFrom = Long.MaxValue)
     if (fs.exists(root))
-      for (g <- genMarkers(fs, root))
-        fs.delete(new Path(s"$dir/gen-$g"), false)
+      for (st <- fs.listStatus(root); n = st.getPath.getName
+           if GenMarkerPat.matches(n) || PendingAppendPat.matches(n))
+        fs.delete(st.getPath, false)
     fs.delete(new Path(s"$dir/ingested"), true)
-    // one-time sweep of PRE-GENERATIONAL leftovers (r17 advice): the
-    // old rename-swap layout's `<kind>-retired`/`<kind>-compact`
-    // scratch and `compact-inflight` marker match no generation
-    // pattern, so without this a rebuild over such a dir silently
-    // kept them forever (the documented "one-time rebuild" migration
-    // path must actually leave a clean directory). Cheap existence
-    // checks; no released artifact ever wrote these names, so this is
-    // hygiene for hand-migrated dirs, not legacy-format support.
+    // sweep of PRE-GENERATIONAL leftovers: the old rename-swap
+    // layout's `<kind>-retired`/`<kind>-compact` scratch and
+    // `compact-inflight` marker match no generation pattern, so
+    // without this a rebuild over such a dir kept them forever (the
+    // documented "one-time rebuild" migration path must leave a clean
+    // directory). Cheap existence checks; no released artifact ever
+    // wrote these names, so this is hygiene for hand-migrated dirs,
+    // not legacy-format support.
     for (kind <- kinds; suffix <- Seq("retired", "compact"))
       fs.delete(new Path(s"$dir/$kind-$suffix"), true)
     fs.delete(new Path(s"$dir/compact-inflight"), true)
@@ -541,11 +549,11 @@ object Stores {
     * the stores' mutations are safe to interleave (two appends can
     * interleave the stats/version read-modify-write cycles, a compact
     * can swap directories out from under a concurrent append, two
-    * writes can interleave their clear-then-write sequences), and
-    * before r17 that single-writer assumption was IMPLICIT — a
-    * scheduler bug that double-launched a mutation corrupted state
-    * silently. The lock makes the contract loud: the second mutator
-    * fails immediately, naming the holder.
+    * writes can interleave their clear-then-write sequences), and an
+    * implicit single-writer assumption lets a scheduler bug that
+    * double-launches a mutation corrupt state silently. The lock makes
+    * the contract loud: the second mutator fails immediately, naming
+    * the holder.
     *
     * Honest limits, documented not hidden: (1) the lock is ADVISORY —
     * it guards the graft entry points, not the directory (an external
@@ -576,8 +584,7 @@ object Stores {
         if (!fs.exists(p)) throw e
         throw new IllegalStateException(
           s"store $dir is locked by another mutation (" +
-            readMetaSidecar(s, p.toString).fold("unreadable lock")(m =>
-              s"op=${m.getOrElse("op", "?")} since=${m.getOrElse("since", "?")}") +
+            holderOf(s, p.toString, "unreadable lock") +
             s") — '$op' refused. If the holder crashed, run " +
             "Stores.storeFsck(dir) to classify the store and clear the " +
             "lock; never delete it while a mutation is live.")
@@ -589,23 +596,64 @@ object Stores {
     finally fs.delete(p, false)
   }
 
+  /** "op=… since=…" of an (op, since) sidecar — a lock or a
+    * pending-append marker. */
+  private def holderOf(s: SparkSession, path: String,
+      unreadable: String): String =
+    readMetaSidecar(s, path).fold(unreadable)(m =>
+      s"op=${m.getOrElse("op", "?")} since=${m.getOrElse("since", "?")}")
+
   /** The lock-present fsck row: reports (and with `execute` clears)
     * a `mutation-lock` left by a crashed mutation. First row of every
-    * per-store fsck, BEFORE any repair — the repairs themselves
-    * re-acquire the lock through the ops they call. */
+    * fsck, BEFORE any repair — the repairs themselves re-acquire the
+    * lock through the ops they call. */
   private def fsckMutationLock(s: SparkSession, indexDir: String,
-      execute: Boolean): Seq[(String, String, String)] = {
+      execute: Boolean): Seq[FsckRow] = {
     val p = new Path(s"$indexDir/mutation-lock")
     val fs = fsOf(s, p)
     if (!fs.exists(p)) Nil
     else {
-      val held = readMetaSidecar(s, p.toString).fold("unreadable")(m =>
-        s"op=${m.getOrElse("op", "?")} since=${m.getOrElse("since", "?")}")
+      val held = holderOf(s, p.toString, "unreadable")
       if (execute) fs.delete(p, false)
       Seq(("mutation-lock", s"held ($held) — crashed mutation or live " +
         "mutator (fsck assumes the store is quiesced)",
         if (execute) "cleared" else "would clear"))
     }
+  }
+
+  /** Open an append's pending marker: a sidecar
+    * `append-pending-<id>` naming the op and its start, written before
+    * the append touches any dataset and deleted only after the append
+    * and its stamp bump complete. A crash or failure in between — an
+    * audit append whose pairs landed but whose candidates did not, a
+    * search append that wrote postings but not docs — leaves the
+    * marker, and fsck reports the torn append instead of a healthy
+    * store. Every append has its own id, so a later successful append
+    * cannot hide an earlier torn one; a rebuild clears every marker
+    * ([[clearStoreLife]]). Driver-side FS ops only — no Spark job. */
+  private def openPendingAppend(s: SparkSession, dir: String,
+      op: String): Path = {
+    val name = "append-pending-" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    writeMetaSidecar(s, s"$dir/$name",
+      Seq("op" -> op, "since" -> java.time.Instant.now().toString))
+    new Path(s"$dir/$name")
+  }
+
+  /** One report-only row per pending-append marker: the append's delta
+    * may be partly applied (or applied with its stamp bump lost), and
+    * only the source batch can tell — `repair` is the family's fix. */
+  private def fsckPendingAppends(s: SparkSession, dir: String,
+      repair: String): Seq[FsckRow] = {
+    val root = new Path(dir)
+    val fs = fsOf(s, root)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(PendingAppendPat.matches).sorted.map(n =>
+        (s"torn append $n",
+          s"${holderOf(s, s"$dir/$n", "unreadable marker")} never " +
+            "completed — its delta may be partly applied",
+          s"report-only: $repair; delete the marker once repaired"))
   }
 
   /** Write a tiny metadata sidecar (a store's manifest / stats row) as
@@ -624,37 +672,378 @@ object Stores {
       !k.contains("=") && !(k + v).exists(c => c == '\n' || c == '\r') },
       s"writeMetaSidecar: keys must not contain '=' and no field may " +
         s"contain a newline — got $kvs")
-    val p = new Path(path)
-    val tmp = new Path(s"$path-tmp")
-    val fs = fsOf(s, p)
-    val out = fs.create(tmp, true)
-    try out.write(kvs.map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, true)
-    require(fs.rename(tmp, p),
-      s"writeMetaSidecar: rename failed for $path")
+    writeText(s, path, kvs.map { case (k, v) => s"$k=$v" }.mkString("\n"))
   }
 
   /** Read a [[writeMetaSidecar]] file as a key→value map; None when
     * absent (store families that allow pre-manifest stores skip
     * validation on None). */
   private[graft] def readMetaSidecar(s: SparkSession,
-      path: String): Option[Map[String, String]] = {
-    val p = new Path(path)
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      Some(raw.split("\n").iterator.filter(_.nonEmpty).map { line =>
+      path: String): Option[Map[String, String]] =
+    readText(s, path).map(_.split("\n").iterator.filter(_.nonEmpty)
+      .map { line =>
         val i = line.indexOf('=')
         require(i > 0, s"malformed sidecar line '$line' in $path")
         line.substring(0, i) -> line.substring(i + 1)
       }.toMap)
+
+  // ───────────────── the store-family lifecycle ─────────────────
+
+  /** One fsck report row: (check, state, action). */
+  private[graft] type FsckRow = (String, String, String)
+
+  /** A report-only fsck check for rows appended more than once: rows of
+    * dataset `kind` sharing `key` are duplicates, counted as distinct
+    * `distinctOn` ids when given, else as duplicate keys. `repair` names
+    * the fix, which needs the source batch, so fsck never runs it. */
+  private[graft] final case class DupCheck(kind: String, key: Seq[String],
+      distinctOn: Option[String], label: String, noun: String,
+      repair: String)
+
+  /** The repair of a replayed or torn doc-store append. */
+  private[operators] val ReplayRepair =
+    "re-run the batch through Stores.replayRepair (delete + compact + " +
+      "re-append, given the source batch), or rebuild"
+
+  /** One store family's lifecycle spec. A family names its
+    * per-generation artifacts (`genKinds` — what a compact republishes
+    * under the next generation and later vacuums), its `datasets` (the
+    * current generation must hold all of them; the first is partitioned
+    * by `partCol` and is how [[storeFsck]] recognizes the family) and
+    * the `idCol` its tombstones carry, and implements the hooks below:
+    * the manifest check that yields the frozen partition count, the
+    * declared read schemas, the live readers a compact rewrites, the
+    * stats report and the fsck checks.
+    *
+    * The lifecycle is written once, here, over those hooks: write,
+    * append, the Seq/frame/pinned deletes, compact, the stats file
+    * listing, maintain, the ledgered ingest and fsck. Op names are
+    * `name` + verb (`searchIndexAppend`, …): they label the store lock
+    * and every error. */
+  private[graft] abstract class StoreFamily(val name: String,
+      val genKinds: Seq[String], val datasets: Seq[String],
+      val partCol: String, val idCol: String) {
+
+    /** Validate the store's manifest and return its frozen partition
+      * count (recorded in the manifest, or the family's constant). */
+    def partitions(s: SparkSession, dir: String): Int
+
+    /** Declared read schema of dataset `kind`. */
+    def schema(kind: String): String
+
+    /** Live rows of dataset `kind` at generation `g` — tombstones
+      * subtracted — in write shape: what a compact rewrites. */
+    def liveRows(s: SparkSession, dir: String, g: Long,
+        kind: String): DataFrame
+
+    /** The per-partition health report: (partCol, live rows, …,
+      * files), ordered by partition — what [[maintain]] decides over. */
+    def stats(s: SparkSession, dir: String): DataFrame =
+      throw new UnsupportedOperationException(s"$name has no stats report")
+
+    /** The report-only duplicate checks fsck runs. */
+    def dupChecks: Seq[DupCheck]
+
+    /** The repair fsck names for an append that never completed. */
+    def appendRepair: String
+
+    /** The tombstone rows a delete of `ids` (one `idCol` long column)
+      * appends: the ids themselves, funneled to one file — Seq batches
+      * (`operatorSized`) coalesce, frame batches repartition after
+      * whatever plan computes them. */
+    def tombstoneRows(s: SparkSession, dir: String, g: Long,
+        ids: DataFrame, operatorSized: Boolean): DataFrame =
+      if (operatorSized) ids.coalesce(1) else ids.repartition(1)
+
+    /** Write generation `ng`'s datasets from generation `g`'s live
+      * rows, `n` partitions each. */
+    def rewrite(s: SparkSession, dir: String, g: Long, ng: Long,
+        n: Int): Unit =
+      datasets.foreach(k =>
+        writeParts(liveRows(s, dir, g, k), at(dir, k, ng), n, "overwrite"))
+
+    /** Checks fsck runs once the current generation's datasets exist;
+      * a repair may compact (the dup checks re-resolve the generation). */
+    def fsckExtras(s: SparkSession, dir: String, g: Long,
+        execute: Boolean): Seq[FsckRow] = Nil
+
+    /** The rows [[maintain]] counts tombstoned rows over. */
+    def maintainRows(s: SparkSession, dir: String, g: Long): DataFrame =
+      read(s, dir, datasets.head, g)
+
+    /** Append a doc batch (`idCol`, `textCol`, `vecCol` columns) — the
+      * [[appendAll]] step of a doc store. */
+    def appendDocs(pinned: DataFrame, dir: String, idCol: String,
+        textCol: String, vecCol: String): Unit =
+      throw new UnsupportedOperationException(s"$name is not a doc store")
+
+    final def op(verb: String): String = name + verb
+
+    /** Generation `g`'s path of artifact `kind`. */
+    final def at(dir: String, kind: String, g: Long): String =
+      s"$dir/${genName(kind, g)}"
+
+    final def read(s: SparkSession, dir: String, kind: String,
+        g: Long): DataFrame =
+      s.read.schema(schema(kind)).parquet(at(dir, kind, g))
+
+    /** Write `df` partitioned by `partCol` with one write task per
+      * partition value, so every write, append and compact lands at
+      * most one file per partition directory — small-file accretion
+      * between compacts is bounded by appends × partitions touched. */
+    final def writeParts(df: DataFrame, path: String, n: Int,
+        mode: String): Unit =
+      df.repartition(n, col(partCol))
+        .write.mode(mode).partitionBy(partCol).parquet(path)
+
+    /** Declared read schema of the tombstone set: the ids, plus any
+      * state a delete captures with them. */
+    def tombSchema: String = s"$idCol BIGINT"
+
+    /** Generation `g`'s tombstoned ids (one `idCol` column); None before
+      * the first delete. Tombstones are generational: a compact folds
+      * the set into the next generation, which starts with none, while
+      * the old set stays with its grace generation. */
+    final def tombIds(s: SparkSession, dir: String,
+        g: Long): Option[DataFrame] = {
+      val p = new Path(at(dir, "tombstones", g))
+      if (!exists(s, p)) None
+      else {
+        val t = s.read.schema(tombSchema).parquet(p.toString)
+        Some(if (t.columns.length == 1) t else t.select(idCol))
+      }
+    }
+
+    /** (Re)build the store: lock → clear the prior store life → manifest
+      * → `body` writes the generation-0 datasets → a fresh
+      * corpus-version stamp of 0 (a rebuild starts a new coordination
+      * epoch). */
+    final def write(s: SparkSession, dir: String,
+        manifest: Seq[(String, String)])(body: => Unit): Unit =
+      withStoreLock(s, dir, op("Write")) {
+        clearStoreLife(s, dir, genKinds)
+        writeMetaSidecar(s, s"$dir/manifest", manifest)
+        body
+        writeStoreVersion(s, dir, 0L)
+      }
+
+    /** Append a delta under the frozen geometry: lock → manifest check
+      * → pending marker ([[openPendingAppend]]) → `body(g, n)` appends
+      * into current generation `g` with `n` partitions → stamp bump →
+      * marker removed. */
+    final def append(s: SparkSession, dir: String)(
+        body: (Long, Int) => Unit): Unit =
+      withStoreLock(s, dir, op("Append")) {
+        val n = partitions(s, dir)
+        val g = currentGen(s, dir)
+        val pending = openPendingAppend(s, dir, op("Append"))
+        body(g, n)
+        bumpStoreVersion(s, dir)
+        fsOf(s, pending).delete(pending, false)
+      }
+
+    /** LOGICAL delete of an operator-sized id list: tombstones are
+      * appended, serves subtract them immediately, [[compact]] reclaims
+      * the space. */
+    final def delete(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
+      require(ids.nonEmpty, s"${op("Delete")}: ids must be non-empty")
+      import s.implicits._
+      deleteBody(s, dir, ids.distinct.toDF(idCol), operatorSized = true)
+    }
+
+    /** FRAME-shaped delete (the no-collect takedown path): the ids never
+      * cross the driver. The caller's frame is validated
+      * ([[requireLongIds]]) and pinned, so a non-deterministic ids plan
+      * cannot tombstone one id set and report another; the pin is
+      * released once the write has materialized. */
+    final def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
+      val pinned = requireLongIds(ids, idCol, op("Delete")).localCheckpoint()
+      try deleteBody(s, dir, pinned, operatorSized = false)
+      finally
+        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
+    }
+
+    /** [[delete]] for an ids frame the caller already validated and
+      * pinned ([[takedownAll]]): skips the guard and pin, which would
+      * re-materialize the batch once per store. */
+    final def deletePinned(s: SparkSession, dir: String,
+        ids: DataFrame): Unit =
+      deleteBody(s, dir, ids, operatorSized = false)
+
+    private def deleteBody(s: SparkSession, dir: String, ids: DataFrame,
+        operatorSized: Boolean): Unit =
+      withStoreLock(s, dir, op("Delete")) {
+        val g = currentGen(s, dir)
+        tombstoneRows(s, dir, g, ids, operatorSized)
+          .write.mode("append").parquet(at(dir, "tombstones", g))
+        bumpStoreVersion(s, dir)
+      }
+
+    /** Compact into the NEXT GENERATION: rewrite the live rows at fresh
+      * `<kind>-g<N+1>` paths ([[rewrite]]), then COMMIT everything with
+      * one atomic pointer flip ([[writeGen]]) — the datasets and the
+      * now-empty tombstone set change together or not at all. The
+      * pre-compact generation stays as the serve grace (a serve
+      * constructed before the flip keeps reading its pinned
+      * generation); this compact vacuums the generations before it.
+      * Crash pre-flip leaves the store intact plus torn scratch; crash
+      * post-flip leaves expired generations — both directory hygiene
+      * fsck repairs. Compaction is physical housekeeping and never
+      * bumps the corpus-version stamp.
+      *
+      * PURGE NOTE (takedown compliance): the grace generation still
+      * carries the tombstoned rows' bytes, so the PHYSICAL purge of a
+      * delete completes at the SECOND compact after it ([[purgeAll]]). */
+    final def compact(s: SparkSession, dir: String): Unit =
+      withStoreLock(s, dir, op("Compact")) {
+        val n = partitions(s, dir)
+        val g = currentGen(s, dir)
+        val ng = g + 1
+        rewrite(s, dir, g, ng, n)
+        writeGen(s, dir, ng)
+        vacuumGens(s, dir, genKinds, keepFrom = g)
+      }
+
+    /** The current main dataset's partition directories, driver-side:
+      * (partition value, path). */
+    final def partitionDirs(s: SparkSession, dir: String,
+        g: Long): Seq[(Long, Path)] = {
+      val root = new Path(at(dir, datasets.head, g))
+      fsOf(s, root).listStatus(root).toSeq
+        .filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith(s"$partCol="))
+        .map(st => (st.getPath.getName.stripPrefix(s"$partCol=").toLong,
+          st.getPath))
+    }
+
+    /** `counts` (keyed by `partCol`) right of the per-partition parquet
+      * file counts. The FS listing is the authoritative partition set: a
+      * partition whose rows are all tombstoned still reports its files —
+      * the pending-compaction state the report exists to surface. */
+    final def withFiles(s: SparkSession, dir: String, g: Long,
+        counts: => DataFrame): DataFrame = {
+      val root = new Path(at(dir, datasets.head, g))
+      val fs = fsOf(s, root)
+      require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
+        s"${op("Stats")}: no ${datasets.head} dataset under $dir — not a " +
+          s"store directory (${op("Write")} creates ${datasets.head}/)")
+      val files = partitionDirs(s, dir, g).map { case (v, p) =>
+        (v, fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")))
+      }
+      import s.implicits._
+      // the file-count frame carries the partition column's declared type
+      broadcast(if (schema(datasets.head).contains(s"$partCol BIGINT"))
+          files.toDF(partCol, "files")
+        else files.map { case (v, n) => (v.toInt, n) }.toDF(partCol, "files"))
+        .join(counts, Seq(partCol), "left")
+    }
+
+    /** The MAINTENANCE POLICY: per partition, (partCol, live rows,
+      * files, tomb, `keep`…, action) where action is `compact` when the
+      * partition's file count exceeds `maxFiles` (append/ingest
+      * small-file accretion) or its tombstoned-row share exceeds
+      * `maxTombBp` basis points (dead rows every serve still
+      * subtracts), `retrain` first where the family's `retrain`
+      * condition holds, else `ok`. `execute = true` runs [[compact]]
+      * when any partition decides `compact` — compaction is whole-store
+      * by construction, so one trigger suffices — and returns the
+      * decided table. */
+    final def maintain(s: SparkSession, dir: String, maxFiles: Int,
+        maxTombBp: Long, execute: Boolean, keep: Seq[String] = Nil,
+        retrain: Option[Column] = None): DataFrame = {
+      require(maxFiles >= 1 && maxTombBp >= 0,
+        s"${op("Maintain")}: maxFiles >= 1, maxTombBp >= 0")
+      val g = currentGen(s, dir)
+      // the stats report shows the LIVE view; the policy also needs the
+      // dead rows, counted from the raw scan against the tombstones
+      val raw = maintainRows(s, dir, g)
+      val dead = tombIds(s, dir, g).fold(raw.filter(lit(false)))(t =>
+        raw.join(broadcast(t), Seq(idCol), "left_semi"))
+      val tomb = dead.groupBy(partCol).agg(count(lit(1)).as("tomb"))
+      val st = stats(s, dir)
+      val live = col(st.columns(1))
+      val all = live + col("tomb")
+      val compactIf = col("files") > maxFiles ||
+        (all > 0 && col("tomb") * 10000L > lit(maxTombBp) * all)
+      val report = st.join(tomb, Seq(partCol), "left")
+        .select(Seq(col(partCol), live, col("files"),
+          coalesce(col("tomb"), lit(0L)).as("tomb")) ++ keep.map(col): _*)
+        .withColumn("action", retrain.fold(when(compactIf, "compact"))(r =>
+          when(r, "retrain").when(compactIf, "compact")).otherwise("ok"))
+        .orderBy(partCol)
+      if (!execute) report
+      else {
+        // the report is partition-sized and about to drive a side
+        // effect — materializing it is the op's documented shape
+        val decided = report.collect()
+        if (decided.exists(_.getAs[String]("action") == "compact"))
+          compact(s, dir)
+        s.createDataFrame(java.util.Arrays.asList(decided: _*), report.schema)
+      }
+    }
+
+    /** CONTINUOUS ingestion: each micro-batch of `delta` is appended
+      * with `appendBatch`, guarded by a batch-id LEDGER at
+      * `ingested/batch-<id>/` — a marker written after the append makes
+      * checkpoint replays skip already-applied batches, so a clean
+      * stop/restart never double-appends. The honest crash window:
+      * dying BETWEEN the append and its marker replays that one batch
+      * at-least-once — the repair is a delete of the duplicate ids plus
+      * [[compact]], or a rebuild ([[replayRepair]] runs it given the
+      * batch); exactly-once would need the append and the marker in one
+      * atomic commit, which this directory layout does not have. */
+    final def ingest(delta: DataFrame, dir: String, checkpointDir: String)(
+        appendBatch: DataFrame => Unit)
+        : org.apache.spark.sql.streaming.StreamingQuery =
+      delta.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .outputMode("append")
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          val marker = new Path(s"$dir/ingested/batch-$batchId")
+          val fs = fsOf(batch.sparkSession, marker)
+          if (!fs.exists(marker)) {
+            if (!batch.isEmpty) appendBatch(batch)
+            // a silently-false mkdirs would leave the marker missing and
+            // the next replay would double-append — fail the batch loudly
+            require(fs.mkdirs(marker),
+              s"${op("Ingest")}: ledger marker create failed: $marker")
+          }
+          ()
+        }
+        .start()
+
+    /** fsck: classifies and (with `execute`) repairs every crash window
+      * — the crashed-mutation lock, generation hygiene, torn appends
+      * (report-only), a current generation missing a dataset (external
+      * damage or a crashed write: rebuild), the family's extras — then
+      * reports duplicate rows (report-only: the repair needs the source
+      * batch). Returns (check, state, action), led by the store's
+      * corpus-version stamp. */
+    final def fsck(s: SparkSession, dir: String,
+        execute: Boolean): DataFrame = {
+      val rows = scala.collection.mutable.ArrayBuffer[FsckRow]()
+      rows ++= fsckMutationLock(s, dir, execute)
+      rows ++= fsckGenerations(s, dir, genKinds, execute)
+      rows ++= fsckPendingAppends(s, dir, appendRepair)
+      val g = currentGen(s, dir)
+      if (!datasets.forall(k => exists(s, new Path(at(dir, k, g)))))
+        rows += (("datasets", s"current generation g$g incomplete",
+          "unrecoverable without a rebuild"))
+      else {
+        rows ++= fsckExtras(s, dir, g, execute)
+        val gNow = currentGen(s, dir)
+        rows ++= dupChecks.map { c =>
+          val dups = read(s, dir, c.kind, gNow)
+            .groupBy(c.key.map(col): _*).count()
+            .filter(col("count") > 1)
+          val n = c.distinctOn.fold(dups)(id => dups.select(id).distinct())
+            .count()
+          (c.label,
+            if (n == 0) "none" else s"$n ${c.noun} appended more than once",
+            if (n == 0) "none" else c.repair)
+        }
+      }
+      report(s, dir, rows.toSeq)
     }
   }
 
@@ -709,48 +1098,22 @@ object Stores {
   }
 
   /** [[chunkIdsPlan]] for a FRAME of doc ids (the no-collect takedown
-    * path): same packed-range pruning — the batch's (min, max) bounds
-    * are read with ONE two-long aggregate over the ids frame (bounded
-    * driver data at any batch size; the id LIST never leaves the
-    * executors) — and the membership test is a semi-join on the
-    * computed `doc_id div base` key instead of an `isInCollection`
-    * literal list. Empty batch → empty plan.
-    *
-    * `knownBounds`: when the caller already holds the batch's
-    * (min, max) — [[takedownAll]]'s one pin-time (count, min, max)
-    * aggregate — pass them to skip this plan's own bounds job AND the
-    * per-row packability guard (min ≥ 0 and max packable covers every
-    * row). Without them, packability is guarded PER ROW inside the
-    * plan (raise_error), since a frame's ids can't be range-checked
-    * driver-side like the Seq form's. */
+    * path): the same packed-range pruning, from the batch's pin-time
+    * (min, max) `bounds` — [[takedownAll]]'s one (count, min, max)
+    * aggregate, so this plan needs no bounds job of its own (the id
+    * LIST never leaves the executors) — and the membership test is a
+    * semi-join on the computed `doc_id div base` key instead of an
+    * `isInCollection` literal list. */
   private[graft] def chunkIdsFramePlan(s: SparkSession, dir: String,
-      base: Long, docIds: DataFrame,
-      knownBounds: Option[(Long, Long)] = None): DataFrame = {
-    val guarded = knownBounds match {
-      case Some((lo, hi)) =>
-        require(lo >= 0 && hi < Long.MaxValue / base,
-          s"takedown: batch bounds [$lo, $hi] not packable under " +
-            s"chunkIdBase $base")
-        docIds
-      case None => docIds.select(
-        when(col("doc_id") >= 0 && col("doc_id") < Long.MaxValue / base,
-          col("doc_id"))
-          .otherwise(raise_error(concat(
-            lit("takedown: doc_id "), col("doc_id").cast("string"),
-            lit(s" not packable under chunkIdBase $base"))))
-          .as("doc_id"))
-    }
-    val b = knownBounds.getOrElse {
-      val r = guarded.agg(min("doc_id"), max("doc_id")).head()
-      if (r.isNullAt(0)) null else (r.getLong(0), r.getLong(1))
-    }
-    val docsPath = s"$dir/${genName("docs", currentGen(s, dir))}"
-    val chunks = s.read.schema("doc_id BIGINT").parquet(docsPath)
-    if (b == null) return chunks.select("doc_id").filter(lit(false))
-    chunks
-      .filter(col("doc_id") >= b._1 * base
-        && col("doc_id") < (b._2 + 1) * base)
-      .join(guarded.select(col("doc_id").as("__td_doc")),
+      base: Long, docIds: DataFrame, bounds: (Long, Long)): DataFrame = {
+    val (lo, hi) = bounds
+    require(lo >= 0 && hi < Long.MaxValue / base,
+      s"takedown: batch bounds [$lo, $hi] not packable under " +
+        s"chunkIdBase $base")
+    s.read.schema("doc_id BIGINT")
+      .parquet(s"$dir/${genName("docs", currentGen(s, dir))}")
+      .filter(col("doc_id") >= lo * base && col("doc_id") < (hi + 1) * base)
+      .join(docIds.select(col("doc_id").as("__td_doc")),
         expr(s"doc_id div ${base}L") === col("__td_doc"), "left_semi")
       .select("doc_id").distinct()
   }
@@ -793,21 +1156,87 @@ object Stores {
         .as(colName))
   }
 
-  /** A store a [[takedown]] must reach. `dir` is the store directory;
-    * the subtype says which lifecycle family owns it. */
-  sealed trait StoreRef { def dir: String }
+  /** A store a [[takedown]] or [[appendAll]] must reach. `dir` is the
+    * store directory; `family` owns its lifecycle, and the per-store
+    * steps of the coordinated ops dispatch through it — a subtype
+    * overrides a step only where its layout differs from its family's
+    * (the chunk-level search store). */
+  sealed abstract class StoreRef(
+      private[operators] val family: StoreFamily) {
+    def dir: String
+    /** Refuse a takedown batch with doc-id bounds [lo, hi] this store
+      * cannot address — checked for every store before any mutates. */
+    private[operators] def checkBounds(lo: Long, hi: Long): Unit = ()
+    /** Tombstone an operator-sized list of doc ids. */
+    private[operators] def deleteDocs(s: SparkSession,
+        docIds: Seq[Long]): Unit = family.delete(s, dir, docIds)
+    /** Tombstone a validated, pinned `doc_id` frame with pin-time
+      * bounds `bounds`. */
+    private[operators] def deleteDocsPinned(s: SparkSession, ids: DataFrame,
+        bounds: (Long, Long)): Unit =
+      family.deletePinned(s, dir,
+        if (family.idCol == "doc_id") ids
+        else ids.select(col("doc_id").as(family.idCol)))
+    /** Append a pinned doc batch. */
+    private[operators] def appendDocs(pinned: DataFrame, idCol: String,
+        textCol: String, vecCol: String): Unit =
+      family.appendDocs(pinned, dir, idCol, textCol, vecCol)
+  }
   /** A doc-level [[Search.searchIndexWrite]] store. */
-  final case class SearchStore(dir: String) extends StoreRef
+  final case class SearchStore(dir: String)
+    extends StoreRef(Search.SearchFamily)
   /** A CHUNK-level search store whose ids are packed
     * doc_id·`chunkIdBase`+chunk_idx (q186's layout): a takedown
     * resolves the doc's live chunk ids from the docs sidecar and
-    * tombstones them all. */
+    * tombstones them all; an append receives the chunked corpus (fixed
+    * C=S=64 windows, ids packed under the store's base — which must
+    * equal the packer's). */
   final case class ChunkSearchStore(dir: String,
-      chunkIdBase: Long = 1000000L) extends StoreRef
+      chunkIdBase: Long = 1000000L) extends StoreRef(Search.SearchFamily) {
+    private def requireBase(): Unit =
+      require(chunkIdBase > 0,
+        s"takedown: chunkIdBase $chunkIdBase must be positive")
+    override private[operators] def checkBounds(lo: Long,
+        hi: Long): Unit = {
+      requireBase()
+      require(lo >= 0 && hi < Long.MaxValue / chunkIdBase,
+        s"takedown: batch bounds [$lo, $hi] not packable under " +
+          s"chunkIdBase $chunkIdBase — refused with zero stores mutated")
+    }
+    override private[operators] def deleteDocs(s: SparkSession,
+        docIds: Seq[Long]): Unit = {
+      requireBase()
+      docIds.foreach(id =>
+        require(id >= 0 && id < Long.MaxValue / chunkIdBase,
+          s"takedown: doc_id $id not packable under chunkIdBase $chunkIdBase"))
+      val ids = chunkIdsPlan(s, dir, chunkIdBase, docIds)
+        .collect().map(_.getLong(0)).toSeq
+      if (ids.nonEmpty) family.delete(s, dir, ids)
+    }
+    override private[operators] def deleteDocsPinned(s: SparkSession,
+        ids: DataFrame, bounds: (Long, Long)): Unit = {
+      requireBase()
+      family.deletePinned(s, dir,
+        chunkIdsFramePlan(s, dir, chunkIdBase, ids, bounds))
+    }
+    override private[operators] def appendDocs(pinned: DataFrame,
+        idCol: String, textCol: String, vecCol: String): Unit = {
+      require(chunkIdBase == Search.ChunkIdBase,
+        s"appendAll: chunk store base $chunkIdBase != the packer's " +
+          s"${Search.ChunkIdBase} — serve-side unpacking would " +
+          "resolve the wrong documents")
+      Search.searchIndexAppendPinned(
+        Search.chunkCorpus(pinned.select(
+          col(idCol).as("doc_id"), col(textCol).as("text"))),
+        dir, "chunk_id", "chunk_text")
+    }
+  }
   /** A [[TextDedup.dedupIndexWrite]] signature store. */
-  final case class DedupStore(dir: String) extends StoreRef
+  final case class DedupStore(dir: String)
+    extends StoreRef(TextDedup.DedupFamily)
   /** A [[Similarity.ivfPqIndexWrite]] ANN store (vec_id = doc_id). */
-  final case class AnnStore(dir: String) extends StoreRef
+  final case class AnnStore(dir: String)
+    extends StoreRef(Similarity.AnnFamily)
 
   /** Apply ONE document's takedown across every store that serves the
     * corpus, in one call — the cross-store twin of the per-store
@@ -847,7 +1276,7 @@ object Stores {
     require(docIds.nonEmpty, "takedown: no doc ids given")
     val target = stores.map(r => storeVersion(s, r.dir)).max + 1
     stores.foreach { ref =>
-      deleteOne(s, ref, docIds)
+      ref.deleteDocs(s, docIds)
       // convergent stamp: SET to the pre-computed target (overwriting
       // the delete's internal +1), so a crashed run's re-run aligns
       // every store instead of chasing an ever-moving increment
@@ -859,16 +1288,15 @@ object Stores {
     * actually arrives in at scale: a takedown list of millions of ids
     * is DATA, and the Seq form would collect it to the driver and
     * inline it into every store's plan as an `isInCollection` literal
-    * list (the r17 verdict's missing #1). Here the ids stay a
-    * DataFrame end to end: tombstones are written via semi-joins
-    * against the ids frame, chunk-id resolution is a join on the
-    * computed unpack key ([[chunkIdsFramePlan]]), and nothing about
-    * the batch ever crosses the driver except ONE (count, min, max)
-    * aggregate — the empty-window check, the chunk family's packed
-    * bounds, and the pin-time packability guard in a single job. The
-    * Seq form stays as operator-sized sugar with its original
-    * literal-list plans (spec-pinned frame ≡ seq on all store
-    * families).
+    * list. Here the ids stay a DataFrame end to end: tombstones are
+    * written via semi-joins against the ids frame, chunk-id resolution
+    * is a join on the computed unpack key ([[chunkIdsFramePlan]]), and
+    * nothing about the batch ever crosses the driver except ONE
+    * (count, min, max) aggregate — the empty-window check, the chunk
+    * family's packed bounds, and the pin-time packability guard in a
+    * single observed metric. The Seq form stays as operator-sized sugar
+    * with its original literal-list plans (spec-pinned frame ≡ seq on
+    * all store families).
     *
     * The ids frame is pinned ONCE (eager localCheckpoint, released in
     * a finally after every store's delete has materialized): every
@@ -878,167 +1306,55 @@ object Stores {
     * the delete side. Same convergent-stamp crash contract as the Seq
     * form: re-running the same takedown re-aligns every store. An
     * EMPTY ids frame is allowed (a compliance feed can produce zero
-    * ids for a window): deletes are no-ops and the stores still land
-    * on the common target stamp. */
+    * ids for a window): no store is deleted from and the stores still
+    * land on the common target stamp. */
   private[graft] def takedownAll(s: SparkSession, docIds: DataFrame,
       stores: Seq[StoreRef]): Unit = {
     require(stores.nonEmpty, "takedown: no stores given")
-    // LOUD id validation, enforced BEFORE any store is touched: a
-    // NULL or non-castable id would otherwise become a silent NULL
-    // under the non-ANSI cast — a compliance takedown that "succeeds"
-    // while the document keeps serving on three families, and a
-    // raise_error mid-list on the chunk family (diverged stamps a
-    // re-run could never converge, because the re-run fails the same
-    // way). The guard rides the eager pin, so a malformed feed fails
-    // HERE, with zero stores mutated or stamped — re-runnable after
-    // the feed is fixed.
-    // the (count, min, max) aggregate RIDES the pin's materialization
-    // as an observed metric (r22, the searchIndexAppend stats
-    // discipline applied here): the eager localCheckpoint already
-    // executes the whole validated plan, so the one remaining
-    // takedown-side aggregate job folds into it for free. The
-    // fallback below keeps the pre-r22 separate aggregate for any
-    // execution path that stops delivering observed metrics —
-    // degraded job count, never wrong bounds.
+    // LOUD id validation, enforced BEFORE any store is touched: a NULL
+    // or non-castable id would otherwise become a silent NULL — a
+    // compliance takedown that "succeeds" while the document keeps
+    // serving, or a raise_error mid-list on the chunk family (diverged
+    // stamps a re-run could never converge, because the re-run fails
+    // the same way). The guard rides the eager pin, so a malformed feed
+    // fails HERE, with zero stores mutated or stamped. The (count, min,
+    // max) aggregate rides the same materialization as an observed
+    // metric; the fallback aggregate only runs if an execution path
+    // stops delivering observed metrics — a degraded job count, never
+    // wrong bounds. Duplicates are NOT normalized away (every consumer
+    // join is duplicate-safe; a distinct would shuffle the batch for
+    // no semantic effect).
     val obs = org.apache.spark.sql.Observation()
     val ids = requireLongIds(docIds, "doc_id", "takedown")
       .observe(obs, count(lit(1)), min("doc_id"), max("doc_id"))
       .localCheckpoint()
-    // duplicates are NOT normalized away (the Seq form doesn't either;
-    // every consumer join is duplicate-safe) — a distinct here would
-    // shuffle the whole batch for no semantic effect
     try {
-      // ONE (count, min, max) aggregate over the pinned batch serves
-      // what used to be three separate jobs (r18 verdict's absorbed-
-      // section cut): the empty-window check (an isEmpty), the chunk
-      // family's packed-range bounds (chunkIdsFramePlan's own
-      // aggregate), and — closing the r18 advice gap — the PIN-TIME
-      // packability guard: a batch whose bounds no chunk store in the
-      // list can pack fails HERE, with zero stores mutated or
-      // stamped, instead of raise_error-ing mid-list after earlier
-      // stores already stamped (diverged stamps until the feed was
-      // fixed, contradicting the pin-time-guard contract).
       val b = awaitObserved(s, obs).getOrElse(
         ids.agg(count(lit(1)), min("doc_id"), max("doc_id")).head())
-      // empty compliance window (explicitly allowed): stamps still
-      // land on the common target, but the per-store deletes are
-      // SKIPPED — without this every empty window committed one
-      // zero-row tombstone file per store, accreting list-and-read
-      // work for every serve until the next compact.
+      // an empty window skips the per-store deletes: each would commit
+      // a zero-row tombstone file every serve lists until the next
+      // compact. A batch no store in the list can address fails here,
+      // before any store mutates.
       val bounds =
         if (b.getLong(0) == 0L) None else Some((b.getLong(1), b.getLong(2)))
-      for ((lo, hi) <- bounds; ref <- stores) ref match {
-        case ChunkSearchStore(_, base) =>
-          require(base > 0, s"takedown: chunkIdBase $base must be positive")
-          require(lo >= 0 && hi < Long.MaxValue / base,
-            s"takedown: batch bounds [$lo, $hi] not packable under " +
-              s"chunkIdBase $base — refused with zero stores mutated")
-        case _ => ()
-      }
+      for ((lo, hi) <- bounds; ref <- stores) ref.checkBounds(lo, hi)
       val target = stores.map(r => storeVersion(s, r.dir)).max + 1
-      bounds match {
-        // empty window: no deletes to interleave — the stamps are the
-        // whole mutation and land concurrently ([[stampAll]])
-        case None => stampAll(s, stores.map(_.dir), target)
-        // non-empty batch: stamp each store IMMEDIATELY after its
-        // delete materializes (r19 advice) — a delete-all-then-stamp
-        // phase split left a crash anywhere in the delete phase with
-        // every stamp at the old COMMON value, so the composed serve
-        // saw no divergence while some stores were tombstoned and
-        // others untouched; interleaving restores the Seq form's loud
-        // crash contract (completed stores ahead, alignment check
-        // fails until the converging re-run completes the batch).
-        // The per-store (delete → stamp) chains run CONCURRENTLY
-        // across stores (r22, [[inParallel]] rationale): each store's
-        // stamp still rides its OWN delete — the r19 contract is
-        // per-store ordering, which threading across stores does not
-        // touch — and a crash now leaves an arbitrary SUBSET (not a
-        // prefix) of stores completed: the same loud divergence, the
-        // same converging re-run. Await-all before rethrow, so no
-        // store's delete is still in flight when the failure
-        // propagates ([[stampAll]]'s ghost-write discipline).
-        case Some(bd) => forAllStores(s, stores) { ref =>
-          deleteOneFrame(s, ref, ids, bd)
-          writeStoreVersion(s, ref.dir, target)
-        }
+      // each store is stamped IMMEDIATELY after its delete
+      // materializes: a delete-all-then-stamp split would leave a
+      // crash in the delete phase with every stamp at the old COMMON
+      // value, so the composed serve would see no divergence while some
+      // stores were tombstoned and others untouched. The per-store
+      // (delete → stamp) chains run concurrently across stores
+      // ([[inParallel]]): a crash leaves an arbitrary SUBSET of stores
+      // completed — the same loud divergence, the same converging
+      // re-run — and every chain is awaited before a failure
+      // propagates, so no stamp lands after a re-run's.
+      forAllStores(s, stores) { ref =>
+        for (bd <- bounds) ref.deleteDocsPinned(s, ids, bd)
+        writeStoreVersion(s, ref.dir, target)
       }
     } finally
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(ids)
-  }
-
-  /** Stamp every store to `target` CONCURRENTLY (r18 verdict #6): the
-    * stamps are independent single-file sidecar writes, and the old
-    * per-store serial loop made the takedown tail a driver-side
-    * latency chain at many stores (each write is a create+rename
-    * round-trip — microseconds on a local FS, a network RTT pair on
-    * an object store). Crash semantics are unchanged from the serial
-    * form: any subset of stamps landing leaves the rest behind, the
-    * composed serve fails loudly on the divergence, and a re-run
-    * converges every store to a fresh common target (the documented
-    * takedown/append convergence rule — it never depended on stamp
-    * ORDER, only on the target being computed once up front).
-    * Since r20 this is the EMPTY-window path only: a non-empty batch
-    * stamps each store right after its delete (r19 advice — a
-    * delete-phase crash must read as a loud divergence, which a
-    * stamps-last phase split silently hid behind the old common
-    * value). */
-  private def stampAll(s: SparkSession, dirs: Seq[String],
-      target: Long): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val writes = dirs.map(d => Future(writeStoreVersion(s, d, target)))
-    // await EVERY future before propagating any failure: throwing on
-    // the first while later writes are still in flight would let a
-    // ghost stamp land AFTER a re-run's fresh stamps (regressing that
-    // store to the old target with no run in flight — a divergence no
-    // re-run is around to converge). Ready-all first, then rethrow
-    // the first failure.
-    writes.foreach(w =>
-      Await.ready(w, scala.concurrent.duration.Duration.Inf))
-    writes.foreach(_.value.get.get)
-  }
-
-  /** One store's FRAME-shaped doc-level delete — [[takedownAll]]'s
-    * DataFrame dispatch. `ids` carries one `doc_id` long column,
-    * ALREADY validated and pinned by the caller (so the per-store
-    * deletes take the `…Pinned` entry points — the public frame
-    * deletes' own guard+pin would re-validate and re-materialize the
-    * batch once per store). `bounds` is the caller's pin-time
-    * (min, max), forwarded so the chunk family's packed-range plan
-    * needs no bounds job of its own. */
-  private def deleteOneFrame(s: SparkSession, ref: StoreRef,
-      ids: DataFrame, bounds: (Long, Long)): Unit = ref match {
-    case SearchStore(dir) =>
-      Search.searchIndexDeletePinned(s, dir, ids)
-    case DedupStore(dir) =>
-      TextDedup.dedupIndexDeletePinned(s, dir, ids)
-    case AnnStore(dir) =>
-      Similarity.ivfPqIndexDeletePinned(s, dir,
-        ids.select(col("doc_id").as("vec_id")))
-    case ChunkSearchStore(dir, base) =>
-      require(base > 0, s"takedown: chunkIdBase $base must be positive")
-      Search.searchIndexDeletePinned(s, dir,
-        chunkIdsFramePlan(s, dir, base, ids, Some(bounds)))
-  }
-
-  /** One store's doc-level delete — the [[takedownAll]] dispatch, also
-    * the first repair step of [[replayRepair]]. Deleting ids a store
-    * never held is a no-op in every family. */
-  private def deleteOne(s: SparkSession, ref: StoreRef,
-      docIds: Seq[Long]): Unit = ref match {
-    case SearchStore(dir) =>
-      Search.searchIndexDelete(s, dir, docIds)
-    case DedupStore(dir) =>
-      TextDedup.dedupIndexDelete(s, dir, docIds)
-    case AnnStore(dir) =>
-      Similarity.ivfPqIndexDelete(s, dir, docIds)
-    case ChunkSearchStore(dir, base) =>
-      require(base > 0, s"takedown: chunkIdBase $base must be positive")
-      docIds.foreach(id => require(id >= 0 && id < Long.MaxValue / base,
-        s"takedown: doc_id $id not packable under chunkIdBase $base"))
-      val ids = chunkIdsPlan(s, dir, base, docIds)
-        .collect().map(_.getLong(0)).toSeq
-      if (ids.nonEmpty) Search.searchIndexDelete(s, dir, ids)
   }
 
   /** Coordinated IDEMPOTENT append — the mutation-side twin of
@@ -1060,70 +1376,76 @@ object Stores {
     * Honest window, same as streaming ingest's: a crash BETWEEN a
     * store's append and its marker replays that store's append
     * at-least-once — the repair is [[replayRepair]] with the same
-    * batch (EXECUTABLE since r17; [[storeFsck]] reports the dup-id
-    * state and names it).
+    * batch ([[storeFsck]] reports the dup-id state and names it).
     *
     * `docs` must carry `idCol`/`textCol`; an [[AnnStore]] in the list
     * additionally needs `vecCol` (the embedding array) and reads its
     * frozen (m, subDim) geometry from the store's own manifest. The
     * delta must be NEW ids on every store (the appends' shared
     * unique-id contract). A [[ChunkSearchStore]] receives the chunked
-    * corpus (fixed C=S=64 windows, ids packed under the store's
-    * base — which must equal the packer's). */
+    * corpus. */
   private[graft] def appendAll(docs: DataFrame, batchId: String,
       stores: Seq[StoreRef], idCol: String = "doc_id",
       textCol: String = "text", vecCol: String = "emb"): Unit = {
     val s = docs.sparkSession
     require(stores.nonEmpty, "appendAll: no stores given")
     requireBatchId(batchId, "appendAll")
-    // pin the delta once, LAZILY (a fully-replayed batch must not pay
-    // a materialization): four store kinds derive different frames
-    // from it, and a non-deterministic input could diverge them — the
-    // same discipline searchIndexAppend applies internally. The pin is
-    // RELEASED in the finally once every store's append has
-    // materialized (Bridge.unpersistLocalCheckpoint) — checkpoint
-    // blocks are invisible to the release ledger, and before r18 they
-    // stayed resident for the session (the r17 footprint tail).
-    // forced flips only AFTER the checkpoint succeeds: flipping first
-    // would make a failed materialization re-run the whole delta job
-    // inside the finally (and mask the original exception if the
-    // re-run also throws)
+    withLazyPin(docs) { pinned =>
+      val target = stores.map(r => storeVersion(s, r.dir)).max + 1
+      // the pin is forced BEFORE the per-store chains fan out: two
+      // threads forcing a lazy pin at once would race the checkpoint
+      // (each store's append must read ONE materialized delta)
+      if (stores.exists(ref => !exists(s, namedMarker(ref, batchId))))
+        pinned()
+      // per-store (append → marker → stamp) chains run concurrently
+      // across stores ([[inParallel]]): the ledger marker still lands
+      // after ITS store's append and the stamp after the marker — the
+      // per-store crash ordering the at-least-once contract rests on —
+      // and a crash leaves an arbitrary SUBSET of stores completed: the
+      // same loud divergence, the same marker-skipping re-run.
+      forAllStores(s, stores)(ref => ledgered(s, ref, batchId, target,
+        "appendAll")(ref.appendDocs(pinned(), idCol, textCol, vecCol)))
+    }
+  }
+
+  /** A store's ledger marker for coordinated batch `batchId`. */
+  private def namedMarker(ref: StoreRef, batchId: String): Path =
+    new Path(s"${ref.dir}/ingested/named-$batchId")
+
+  /** One store's step of a ledgered coordinated batch: `apply` runs
+    * only when the store's marker is absent, and the marker lands after
+    * it; then the store's stamp is SET to the pre-computed `target`
+    * (the [[takedownAll]] convergence rule). */
+  private def ledgered(s: SparkSession, ref: StoreRef, batchId: String,
+      target: Long, op: String)(apply: => Unit): Unit = {
+    val marker = namedMarker(ref, batchId)
+    if (!exists(s, marker)) {
+      apply
+      // a silently-false mkdirs would leave the marker missing and a
+      // re-run would apply the batch to this store twice — fail loudly
+      require(fsOf(s, marker).mkdirs(marker),
+        s"$op: ledger marker create failed: $marker")
+    }
+    writeStoreVersion(s, ref.dir, target)
+  }
+
+  private def exists(s: SparkSession, p: Path): Boolean =
+    fsOf(s, p).exists(p)
+
+  /** Run `body` with `docs` pinned LAZILY — `pinned()` takes an eager
+    * localCheckpoint on first use, so a fully-replayed batch pays no
+    * materialization — and release the pin afterwards (checkpoint
+    * blocks are invisible to the cache release ledger). A failed
+    * materialization never counts as taken: the finally must not re-run
+    * the delta job and mask the original exception. */
+  private def withLazyPin[A](docs: DataFrame)(
+      body: (() => DataFrame) => A): A = {
     var forced = false
     lazy val pinned = {
       val p = docs.localCheckpoint(); forced = true; p
     }
-    try {
-      val target = stores.map(r => storeVersion(s, r.dir)).max + 1
-      // the delta pin is forced BEFORE the per-store chains fan out:
-      // `pinned` is a lazy val, and two threads forcing it at once
-      // would race the checkpoint (each store's append must read ONE
-      // materialized delta, not two competing materializations)
-      if (stores.exists(ref =>
-          !fsOf(s, new Path(s"${ref.dir}/ingested/named-$batchId"))
-            .exists(new Path(s"${ref.dir}/ingested/named-$batchId"))))
-        pinned
-      // per-store (append → marker → stamp) chains run CONCURRENTLY
-      // across stores (r22, [[inParallel]] rationale): the ledger
-      // marker still lands after ITS store's append and the stamp
-      // after the marker — the per-store crash ordering the
-      // at-least-once contract rests on — and a crash leaves an
-      // arbitrary SUBSET of stores completed instead of a prefix:
-      // the same loud divergence, the same marker-skipping re-run.
-      forAllStores(s, stores) { ref =>
-        val marker = new Path(s"${ref.dir}/ingested/named-$batchId")
-        val fs = fsOf(s, marker)
-        if (!fs.exists(marker)) {
-          appendOne(s, ref, pinned, idCol, textCol, vecCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // a re-run would double-append this store — fail loudly
-          require(fs.mkdirs(marker),
-            s"appendAll: ledger marker create failed: $marker")
-        }
-        // convergent stamp, same rule as takedownAll: SET to the
-        // pre-computed target so a crashed run's re-run aligns the list
-        writeStoreVersion(s, ref.dir, target)
-      }
-    } finally if (forced)
+    try body(() => pinned)
+    finally if (forced)
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
   }
 
@@ -1132,50 +1454,6 @@ object Stores {
         c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
       s"$op: batch id '$batchId' must be a filesystem-safe token " +
         "([A-Za-z0-9._-]) — it names the per-store ledger marker")
-
-  /** One store's delta append — the [[appendAll]] dispatch, shared
-    * with [[replayRepair]]'s re-append step. */
-  private def appendOne(s: SparkSession, ref: StoreRef, pinned: DataFrame,
-      idCol: String, textCol: String, vecCol: String): Unit = ref match {
-    // the search appends take the PINNED entry point: the caller's
-    // checkpoint (or a pure derivation of it) already guarantees the
-    // determinism the append's internal pin exists for — a second
-    // checkpoint would only re-materialize the delta and add another
-    // resident pin
-    case SearchStore(dir) =>
-      Search.searchIndexAppendPinned(pinned, dir, idCol, textCol)
-    case ChunkSearchStore(dir, base) =>
-      require(base == Search.ChunkIdBase,
-        s"appendAll: chunk store base $base != the packer's " +
-          s"${Search.ChunkIdBase} — serve-side unpacking would " +
-          "resolve the wrong documents")
-      Search.searchIndexAppendPinned(
-        Search.chunkCorpus(pinned.select(
-          col(idCol).as("doc_id"), col(textCol).as("text"))),
-        dir, "chunk_id", "chunk_text")
-    case DedupStore(dir) =>
-      TextDedup.dedupIndexAppend(pinned, dir, idCol, textCol)
-    case AnnStore(dir) =>
-      val g = readMetaSidecar(s, s"$dir/manifest").getOrElse(
-        throw new IllegalStateException(
-          s"appendAll: ANN store $dir has no manifest — cannot " +
-            "recover its frozen (m, subDim) geometry; append " +
-            "directly with ivfPqIndexAppend or rebuild"))
-      Similarity.ivfPqIndexAppend(
-        Similarity.int8CodedVectors(pinned, idCol, vecCol),
-        dir, g("m").toInt, g("subDim").toInt)
-  }
-
-  /** One store's full compact — the repair step that physically
-    * removes tombstoned rows, duplicated append rows' tombstone-marked
-    * copies, and (search family) orphaned postings. */
-  private def compactOne(s: SparkSession, ref: StoreRef): Unit =
-    ref match {
-      case SearchStore(dir) => Search.searchIndexCompact(s, dir)
-      case ChunkSearchStore(dir, _) => Search.searchIndexCompact(s, dir)
-      case DedupStore(dir) => TextDedup.dedupIndexCompact(s, dir)
-      case AnnStore(dir) => Similarity.ivfPqIndexCompact(s, dir)
-    }
 
   /** PHYSICAL purge — the executable form of the compacts' purge
     * note: run the store's compact TWICE, so the first folds the
@@ -1191,7 +1469,9 @@ object Stores {
   private[graft] def purgeAll(s: SparkSession,
       stores: Seq[StoreRef]): Unit = {
     require(stores.nonEmpty, "purgeAll: no stores given")
-    stores.foreach { ref => compactOne(s, ref); compactOne(s, ref) }
+    stores.foreach { ref =>
+      ref.family.compact(s, ref.dir); ref.family.compact(s, ref.dir)
+    }
   }
 
   /** EXECUTABLE repair for the ONE residual crash window the
@@ -1220,47 +1500,33 @@ object Stores {
     * ([[appendAll]] deliberately stays O(|delta|) and does not pay a
     * membership probe per batch). Caller contract: `docs` is the same
     * batch the crashed run appended (same ids, same content). The
-    * delete step is FRAME-shaped (r18): the batch's ids never cross
-    * the driver, so the repair holds for feed-sized batches too. */
+    * delete step is FRAME-shaped: the batch's ids never cross the
+    * driver, so the repair holds for feed-sized batches too. */
   private[graft] def replayRepair(docs: DataFrame, batchId: String,
       stores: Seq[StoreRef], idCol: String = "doc_id",
       textCol: String = "text", vecCol: String = "emb"): Unit = {
     val s = docs.sparkSession
     require(stores.nonEmpty, "replayRepair: no stores given")
     requireBatchId(batchId, "replayRepair")
-    var forced = false
-    lazy val pinned = {
-      val p = docs.localCheckpoint(); forced = true; p
-    }
-    lazy val batchIds = requireLongIds(
-      pinned.select(col(idCol).as("doc_id")), "doc_id", "replayRepair")
-    // one (count, min, max) aggregate serves the empty-batch guard and
-    // the chunk family's packed-range bounds for EVERY store repaired
-    // (the takedownAll fused-pin-aggregate discipline) — the old form
-    // ran an isEmpty per unmarked store plus a bounds job per chunk
-    // store
-    lazy val batchBounds = {
-      val r = batchIds.agg(count(lit(1)), min("doc_id"), max("doc_id"))
-        .head()
-      require(r.getLong(0) > 0, "replayRepair: empty source batch")
-      (r.getLong(1), r.getLong(2))
-    }
-    try {
-      val target = stores.map(r => storeVersion(s, r.dir)).max + 1
-      stores.foreach { ref =>
-        val marker = new Path(s"${ref.dir}/ingested/named-$batchId")
-        val fs = fsOf(s, marker)
-        if (!fs.exists(marker)) {
-          deleteOneFrame(s, ref, batchIds, batchBounds)
-          compactOne(s, ref)
-          appendOne(s, ref, pinned, idCol, textCol, vecCol)
-          require(fs.mkdirs(marker),
-            s"replayRepair: ledger marker create failed: $marker")
-        }
-        writeStoreVersion(s, ref.dir, target)
+    withLazyPin(docs) { pinned =>
+      lazy val batchIds = requireLongIds(
+        pinned().select(col(idCol).as("doc_id")), "doc_id", "replayRepair")
+      // one (count, min, max) aggregate serves the empty-batch guard and
+      // the chunk family's packed-range bounds for EVERY store repaired
+      lazy val batchBounds = {
+        val r = batchIds.agg(count(lit(1)), min("doc_id"), max("doc_id"))
+          .head()
+        require(r.getLong(0) > 0, "replayRepair: empty source batch")
+        (r.getLong(1), r.getLong(2))
       }
-    } finally if (forced)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
+      val target = stores.map(r => storeVersion(s, r.dir)).max + 1
+      stores.foreach(ref =>
+        ledgered(s, ref, batchId, target, "replayRepair") {
+          ref.deleteDocsPinned(s, batchIds, batchBounds)
+          ref.family.compact(s, ref.dir)
+          ref.appendDocs(pinned(), idCol, textCol, vecCol)
+        })
+    }
   }
 
   // ───────────────── executable crash repair (fsck) ─────────────────
@@ -1278,55 +1544,46 @@ object Stores {
     * GRACE (what keeps pre-flip serves alive) and is reported, never
     * touched. */
   private def fsckGenerations(s: SparkSession, indexDir: String,
-      kinds: Seq[String], execute: Boolean)
-      : Seq[(String, String, String)] = {
-    val fs = fsOf(s, new Path(indexDir))
+      kinds: Seq[String], execute: Boolean): Seq[FsckRow] = {
+    val root = new Path(indexDir)
+    val fs = fsOf(s, root)
     val cur = currentGen(s, indexDir)
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
+    val rows = scala.collection.mutable.ArrayBuffer[FsckRow]()
+    /** A pure-delete hygiene row: `name` is deleted under `execute`. */
+    def tidy(name: String, check: String, state: String): Unit = {
+      if (execute) fs.delete(new Path(s"$indexDir/$name"), true)
+      rows += ((check, state, if (execute) "deleted" else "would delete"))
+    }
     var grace = false
     for (kind <- kinds; g <- gensOf(s, indexDir, kind).sorted) {
-      if (g > cur) {
-        if (execute) fs.delete(new Path(s"$indexDir/${genName(kind, g)}"), true)
-        rows += ((s"torn scratch ${genName(kind, g)}",
-          s"generation $g above the pointer (g$cur) — compact died " +
-            "before its commit flip; store intact",
-          if (execute) "deleted" else "would delete"))
-      } else if (g < cur - 1) {
-        if (execute) fs.delete(new Path(s"$indexDir/${genName(kind, g)}"), true)
-        rows += ((s"expired ${genName(kind, g)}",
-          s"generation $g below the grace (g${cur - 1}) — compact died " +
-            "mid-vacuum",
-          if (execute) "deleted" else "would delete"))
-      } else if (g == cur - 1) grace = true
+      val name = genName(kind, g)
+      if (g > cur)
+        tidy(name, s"torn scratch $name", s"generation $g above the " +
+          s"pointer (g$cur) — compact died before its commit flip; " +
+          "store intact")
+      else if (g < cur - 1)
+        tidy(name, s"expired $name", s"generation $g below the grace " +
+          s"(g${cur - 1}) — compact died mid-vacuum")
+      else if (g == cur - 1) grace = true
     }
-    // stale commit markers — a crash mid-retire in [[writeGen]] leaves
-    // non-max markers behind; they can never roll the pointer back
-    // (readers take the max) but fsck tidies them like the next commit
-    // would
-    val root = new Path(indexDir)
-    if (fs.exists(root))
-      for (m <- genMarkers(fs, root) if m < cur) {
-        if (execute) fs.delete(new Path(s"$indexDir/gen-$m"), false)
-        rows += ((s"stale marker gen-$m",
-          s"non-max commit marker (crashed retire) — pointer reads g$cur " +
-            "regardless",
-          if (execute) "deleted" else "would delete"))
-      }
-    // torn sidecar temps (r17 advice): writeMetaSidecar/writeRawLong
-    // are temp-write + rename, so a crash INSIDE one leaves a
-    // `<sidecar>-tmp` file matching neither the generation nor the
-    // marker patterns — harmless (the re-run write overwrites it) but
-    // previously invisible to fsck, lingering forever. Deleting is
-    // always safe: a -tmp is never read by anything.
-    if (fs.exists(root))
+    if (fs.exists(root)) {
+      // stale commit markers — a crash mid-retire in [[writeGen]]
+      // leaves non-max markers behind; they can never roll the pointer
+      // back (readers take the max) but fsck tidies them like the next
+      // commit would
+      for (m <- genMarkers(fs, root) if m < cur)
+        tidy(s"gen-$m", s"stale marker gen-$m", "non-max commit marker " +
+          s"(crashed retire) — pointer reads g$cur regardless")
+      // torn sidecar temps: the sidecar writes are temp-write + rename,
+      // so a crash INSIDE one leaves a `<sidecar>-tmp` file matching
+      // neither the generation nor the marker patterns — harmless (the
+      // re-run write overwrites it) but lingering forever unless fsck
+      // names it. Deleting is always safe: a -tmp is never read.
       for (n <- fs.listStatus(root).toSeq.map(_.getPath.getName)
-          if SidecarTmpPat.matches(n)) {
-        if (execute) fs.delete(new Path(s"$indexDir/$n"), false)
-        rows += ((s"torn sidecar temp $n",
-          "crash inside a sidecar temp-write — never read; the re-run " +
-            "write overwrites it",
-          if (execute) "deleted" else "would delete"))
-      }
+          if SidecarTmpPat.matches(n))
+        tidy(n, s"torn sidecar temp $n", "crash inside a sidecar " +
+          "temp-write — never read; the re-run write overwrites it")
+    }
     rows += (("generation", s"g$cur" +
       (if (grace) s" (grace g${cur - 1} present — pre-flip serves may " +
         "still read it)" else ""), "none"))
@@ -1334,7 +1591,7 @@ object Stores {
   }
 
   private def report(s: SparkSession, indexDir: String,
-      rows: Seq[(String, String, String)]): DataFrame = {
+      rows: Seq[FsckRow]): DataFrame = {
     import s.implicits._
     // lead with the store's coordination stamp: an operator running
     // fsck mid-incident is about to re-run a mutation, and the stamp
@@ -1344,204 +1601,27 @@ object Stores {
       +: rows).toDF("check", "state", "action")
   }
 
-  /** fsck for a [[Search.searchIndexWrite]] store: classifies and
-    * (with `execute`) repairs every documented crash window —
-    * generation hygiene (torn compact scratch above the pointer,
-    * expired generations below the grace), the append windows (stats
-    * behind docs/; orphaned postings whose doc never landed), and
-    * reports duplicate doc ids (an ingest replay — repair needs the
-    * source batch: delete the ids and re-append, or rebuild; fsck
-    * cannot conjure the lost rows, so this row is report-only).
-    * Returns (check, state, action); `execute = false` classifies
-    * without touching the store. */
+  /** Per-family fsck entry points ([[StoreFamily.fsck]]). */
   private[graft] def searchIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, Search.SearchGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    def at(kind: String) = s"$indexDir/${genName(kind, g)}"
-    if (!fs.exists(new Path(at("postings")))
-        || !fs.exists(new Path(at("docs")))) {
-      // unreachable through any graft crash window (the pointer flip
-      // only publishes fully-written generations) — external damage
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val docs = s.read.schema("doc_id BIGINT, dl INT")
-      .parquet(at("docs"))
-    // stats ≡ agg(docs/) — the append's crash-after-docs window
-    val agg = docs.agg(count(lit(1)).cast("long"),
-      coalesce(sum(col("dl").cast("long")), lit(0L))).head()
-    val stale = readMetaSidecar(s, at("stats")) match {
-      case None => true
-      case Some(st) => st("n_docs").toLong != agg.getLong(0) ||
-        st("sum_dl").toLong != agg.getLong(1)
-    }
-    if (stale) {
-      if (execute)
-        Search.writeSearchStats(s, indexDir, g,
-          agg.getLong(0), agg.getLong(1))
-      rows += (("stats", "stale (≠ agg over docs/)",
-        if (execute) "re-derived from docs/" else "would re-derive"))
-    } else rows += (("stats", "consistent", "none"))
-    // orphaned postings — the append's crash-before-docs window
-    val orphans = s.read
-      .schema("doc_id BIGINT, term STRING, tf INT, bkt INT")
-      .parquet(at("postings"))
-      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-      .count()
-    val compacted = orphans > 0 && execute
-    if (orphans > 0) {
-      if (execute) Search.searchIndexCompact(s, indexDir)
-      rows += (("orphan-postings", s"$orphans rows (doc never landed)",
-        if (execute) "compacted (postings ⊆ docs restored)"
-        else "would compact"))
-    } else rows += (("orphan-postings", "none", "none"))
-    // duplicate ids — ingest at-least-once replay; needs the source.
-    // Re-resolve after a compact: the repair above flipped the store
-    // to a NEW generation, so the pre-compact frame reads retired data
-    val docsNow = if (!compacted) docs
-      else s.read.schema("doc_id BIGINT, dl INT").parquet(
-        s"$indexDir/${genName("docs", currentGen(s, indexDir))}")
-    val dups = docsNow.groupBy("doc_id").count()
-      .filter(col("count") > 1).count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
-
-  /** fsck for a [[TextDedup.dedupIndexWrite]] store: generation
-    * hygiene plus a report-only duplicate-(doc, band) check (ingest
-    * replay — repair needs the source batch). */
+      execute: Boolean = true): DataFrame =
+    Search.SearchFamily.fsck(s, indexDir, execute)
   private[graft] def dedupIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, TextDedup.DedupGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val bands = s"$indexDir/${genName("bands", g)}"
-    if (!fs.exists(new Path(bands))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val dups = s.read.schema("doc_id BIGINT, bv STRING, band INT")
-      .parquet(bands)
-      .groupBy("doc_id", "band").count()
-      .filter(col("count") > 1)
-      .select("doc_id").distinct().count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
-
-  /** fsck for a [[Similarity.ivfPqIndexWrite]] store: generation
-    * hygiene plus a report-only duplicate-(vec, s) check (ingest
-    * replay — repair needs the source vectors). */
+      execute: Boolean = true): DataFrame =
+    TextDedup.DedupFamily.fsck(s, indexDir, execute)
   private[graft] def annIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, Similarity.AnnGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val enc = s"$indexDir/${genName("enc", g)}"
-    if (!fs.exists(new Path(enc))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val dups = s.read
-      .schema("vec_id BIGINT, s INT, code BIGINT, cell BIGINT")
-      .parquet(enc)
-      .groupBy("vec_id", "s").count()
-      .filter(col("count") > 1)
-      .select("vec_id").distinct().count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
+      execute: Boolean = true): DataFrame =
+    Similarity.AnnFamily.fsck(s, indexDir, execute)
 
-  /** fsck for a [[TextDedup.auditStoreWrite]] pair store: crashed-
-    * mutation lock, generation hygiene, and a report-only
-    * duplicate-pair check (an appended delta replayed twice — repair
-    * needs the source delta, so rebuild from the pipeline's own pair
-    * set or delete + compact the affected docs). */
-  private[graft] def auditStoreFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, TextDedup.AuditGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val pairs = s"$indexDir/${genName("pairs", g)}"
-    val cand = s"$indexDir/${genName("cand", g)}"
-    // BOTH datasets must exist at the current generation: a crash
-    // inside auditStoreWrite's (concurrent since r22) dataset writes
-    // can leave either half missing — before the r20 advice fix this
-    // reported healthy while residentAuditCands threw. Honest scope
-    // (r21 advice): this existence check covers the INITIAL write
-    // only — an auditStoreAppend crash between its two appends into
-    // an EXISTING generation leaves both dirs present with the cand
-    // delta lost, a window fsck cannot see without per-batch delta
-    // markers (deferred durability work; the dup checks below report
-    // REPLAYED deltas, not lost ones). The repair is the same either
-    // way: rebuild from the pipeline's own sets.
-    if (!fs.exists(new Path(pairs)) || !fs.exists(new Path(cand))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    // one report-only replay check per dataset (a replayed delta
-    // double-counts): duplicate candidates skew q188's
-    // n_cand/precision exactly the way duplicate pairs skew recall.
-    // Schemas come from TextDedup's declared-read constants so a
-    // store schema change cannot silently diverge from this read.
-    def dupCheck(path: String, schema: String, label: String,
-        noun: String, rebuildFrom: String): (String, String, String) = {
-      val n = s.read.schema(schema).parquet(path)
-        .groupBy("doc_i", "doc_j").count()
-        .filter(col("count") > 1).count()
-      ((label,
-        if (n == 0) "none" else s"$n $noun appended more than once",
-        if (n == 0) "none"
-        else s"report-only: rebuild from the pipeline's $rebuildFrom " +
-          "(auditStoreWrite), or auditStoreDelete the affected docs " +
-          "and compact"))
-    }
-    rows += dupCheck(pairs, TextDedup.AuditPairSchema, "dup-pairs",
-      "pairs", "verified pair set")
-    rows += dupCheck(cand, TextDedup.AuditCandSchema, "dup-cands",
-      "candidates", "candidate set")
-    report(s, indexDir, rows.toSeq)
-  }
-
-  /** Auto-detecting fsck: dispatch on the store's own layout (which
-    * main dataset — at any generation — exists), so an operator can
-    * point fsck at ANY graft store directory without knowing which
-    * family wrote it. */
+  /** Auto-detecting fsck: the family whose main dataset exists (at any
+    * generation) owns the directory, so an operator can point fsck at
+    * ANY graft store without knowing which family wrote it. */
   private[graft] def storeFsck(s: SparkSession, dir: String,
-      execute: Boolean = true): DataFrame = {
-    def anyOf(name: String): Boolean = gensOf(s, dir, name).nonEmpty
-    if (anyOf("postings")) searchIndexFsck(s, dir, execute)
-    else if (anyOf("bands")) dedupIndexFsck(s, dir, execute)
-    else if (anyOf("enc")) annIndexFsck(s, dir, execute)
-    else if (anyOf("pairs")) auditStoreFsck(s, dir, execute)
-    else throw new IllegalArgumentException(
-      s"storeFsck: $dir is not a graft store directory (no postings/, " +
-        "bands/, enc/ or pairs/ dataset in any state)")
-  }
+      execute: Boolean = true): DataFrame =
+    Seq(Search.SearchFamily, TextDedup.DedupFamily, Similarity.AnnFamily,
+        TextDedup.AuditFamily)
+      .find(f => gensOf(s, dir, f.datasets.head).nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(
+        s"storeFsck: $dir is not a graft store directory (no postings/, " +
+          "bands/, enc/ or pairs/ dataset in any state)"))
+      .fsck(s, dir, execute)
 }

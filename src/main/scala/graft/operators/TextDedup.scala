@@ -1361,12 +1361,53 @@ object TextDedup {
     * [[graft.operators.Similarity]]'s IvfPqEncSchema). */
   private val DedupBandSchema = "doc_id BIGINT, bv STRING, band INT"
 
-  /** The dedup store's per-GENERATION artifacts (see
-    * [[Stores.currentGen]]): the band-partitioned signatures and the
-    * tombstone set a compact folds into the next generation. The
-    * geometry manifest, ingest ledger and corpus-version stamp are
-    * store-life state and stay unversioned. */
-  private[graft] val DedupGenKinds = Seq("bands", "tombstones")
+  /** The manifest geometry every dedup and audit store records. */
+  private def dedupGeometry: Seq[(String, String)] = Seq(
+    "shingle_k" -> DedupShingleK.toString,
+    "n_hashes" -> DedupNumHashes.toString,
+    "bands" -> DedupNumBands.toString,
+    "rows_per_band" -> DedupRowsPerBand.toString)
+
+  /** The dedup store family: band-partitioned signatures and the
+    * doc-id tombstone set a compact folds into the next generation.
+    * The geometry manifest, ingest ledger and corpus-version stamp are
+    * store-life state. */
+  private[graft] object DedupFamily extends Stores.StoreFamily(
+      name = "dedupIndex", genKinds = Seq("bands", "tombstones"),
+      datasets = Seq("bands"), partCol = "band", idCol = "doc_id") {
+
+    def partitions(s: SparkSession, dir: String): Int = {
+      checkDedupManifest(s, dir)
+      DedupNumBands
+    }
+
+    def schema(kind: String): String = DedupBandSchema
+
+    def liveRows(s: SparkSession, dir: String, g: Long,
+        kind: String): DataFrame =
+      residentBandsAt(s, dir, g).select(col("doc_id"), col("bv"), col("band"))
+
+    /** Per-band (band, n_docs, files): live resident docs and parquet
+      * files per band directory. */
+    override def stats(s: SparkSession, dir: String): DataFrame = {
+      val g = Stores.currentGen(s, dir)
+      withFiles(s, dir, g, residentBandsAt(s, dir, g)
+          .groupBy("band").agg(count(lit(1)).as("rows")))
+        .select(col("band"),
+          coalesce(col("rows"), lit(0L)).as("n_docs"), col("files"))
+        .orderBy("band")
+    }
+
+    val dupChecks: Seq[Stores.DupCheck] = Seq(Stores.DupCheck("bands",
+      Seq("doc_id", "band"), Some("doc_id"), "dup-ids", "ids",
+      s"report-only: ${Stores.ReplayRepair}"))
+
+    val appendRepair: String = Stores.ReplayRepair
+
+    override def appendDocs(pinned: DataFrame, dir: String, idCol: String,
+        textCol: String, vecCol: String): Unit =
+      dedupIndexAppend(pinned, dir, idCol, textCol)
+  }
 
   /** The (doc_id, band, bv) band view of any (`idCol`, `textCol`)
     * frame — [[bandsOf]] over [[signaturesOf]], the shared derivation
@@ -1379,9 +1420,7 @@ object TextDedup {
 
   /** Write the resident signature store: `docs` (idCol, textCol) →
     * MinHash bands under `outDir/bands/band=<b>/…`, plus a geometry
-    * manifest. Rebuild-safe: stale sidecar state from a prior store
-    * life under the same dir (tombstones, ingest ledger) is cleared —
-    * the [[Similarity.ivfPqIndexWrite]] rebuild rule. */
+    * manifest. Rebuild-safe ([[Stores.StoreFamily.write]]). */
   private[graft] def dedupIndexWrite(docs: DataFrame, outDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
     dedupIndexWriteBands(bandsOfSignatures(docs, idCol, textCol), outDir)
@@ -1390,29 +1429,11 @@ object TextDedup {
     * frame — the entry the metered q184 uses so the store build rides
     * the shared registry signature cache instead of re-shingling. */
   private[operators] def dedupIndexWriteBands(bands: DataFrame,
-      outDir: String): Unit = {
-    val s = bands.sparkSession
-    Stores.withStoreLock(s, outDir, "dedupIndexWrite") {
-    Stores.clearStoreLife(s, outDir, DedupGenKinds)
-    // the manifest is a raw sidecar file (Stores.writeMetaSidecar):
-    // every lifecycle op reads it at construction, and as a one-row
-    // parquet dataset each read was a full Spark job
-    Stores.writeMetaSidecar(s, s"$outDir/manifest", Seq(
-      "shingle_k" -> DedupShingleK.toString,
-      "n_hashes" -> DedupNumHashes.toString,
-      "bands" -> DedupNumBands.toString,
-      "rows_per_band" -> DedupRowsPerBand.toString))
-    bands.select(col("doc_id"), col("bv"), col("band"))
-      // one write task per band: each partition directory gets a
-      // single file instead of (shuffle.partitions × bands) shards
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$outDir/bands")
-    // fresh corpus-version stamp (see [[Stores]]): a rebuild starts a
-    // new coordination epoch at 0
-    Stores.writeStoreVersion(s, outDir, 0L)
+      outDir: String): Unit =
+    DedupFamily.write(bands.sparkSession, outDir, dedupGeometry) {
+      DedupFamily.writeParts(bands.select(col("doc_id"), col("bv"), col("band")),
+        s"$outDir/bands", DedupNumBands, "overwrite")
     }
-  }
 
   /** Append a DELTA of docs to an existing store under the frozen
     * geometry (validated against the manifest). Caller contract: delta
@@ -1423,23 +1444,12 @@ object TextDedup {
     * ANN index the equality is exact by construction — the spec guards
     * the LAYOUT path, not a model). */
   private[graft] def dedupIndexAppend(docs: DataFrame, indexDir: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val s = docs.sparkSession
-    Stores.withStoreLock(s, indexDir, "dedupIndexAppend") {
-    checkDedupManifest(s, indexDir)
-    bandsOfSignatures(docs, idCol, textCol)
-      .select(col("doc_id"), col("bv"), col("band"))
-      // the write's one-file-per-band discipline (r16 verdict on the
-      // search append, applied to all three stores): each append lands
-      // at most one file per band, bounding small-file accretion
-      // between compacts
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("append").partitionBy("band")
-      .parquet(s"$indexDir/${Stores.genName("bands",
-        Stores.currentGen(s, indexDir))}")
-    Stores.bumpStoreVersion(s, indexDir)
+      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    DedupFamily.append(docs.sparkSession, indexDir) { (g, n) =>
+      DedupFamily.writeParts(bandsOfSignatures(docs, idCol, textCol)
+          .select(col("doc_id"), col("bv"), col("band")),
+        DedupFamily.at(indexDir, "bands", g), n, "append")
     }
-  }
 
   /** Serve admit/reject verdicts for a NEW batch against the on-disk
     * resident store: q156's exact semantics ([[ingestVerdicts]] — the
@@ -1457,245 +1467,94 @@ object TextDedup {
       indexDir: String): DataFrame = {
     val s = newBands.sparkSession
     checkDedupManifest(s, indexDir)
-    ingestVerdicts(newBands, residentBands(s, indexDir))
+    ingestVerdicts(newBands,
+      residentBandsAt(s, indexDir, Stores.currentGen(s, indexDir)))
   }
 
-  /** The live resident band view: the partitioned scan minus the
-    * logical-delete set — broadcast anti-join, the
-    * [[Similarity.ivfPqIndexDelete]] contract (tombstones stay small
-    * between compactions; zero cost until the first delete). */
-  private def residentBands(s: SparkSession, indexDir: String): DataFrame =
-    residentBandsAt(s, indexDir, Stores.currentGen(s, indexDir))
-
-  /** [[residentBands]] pinned to generation `g` — the snapshot a serve
-    * constructs against ([[Stores.currentGen]]); compact reads the
-    * pre-flip generation through this explicitly. */
+  /** The live resident band view at generation `g` (the snapshot a
+    * serve constructs against, [[Stores.currentGen]]): the partitioned
+    * scan minus the logical-delete set — a broadcast anti-join
+    * (tombstones stay small between compactions; zero cost until the
+    * first delete). */
   private def residentBandsAt(s: SparkSession, indexDir: String,
       g: Long): DataFrame = {
-    val enc = s.read.schema(DedupBandSchema)
-      .parquet(s"$indexDir/${Stores.genName("bands", g)}")
+    val enc = DedupFamily.read(s, indexDir, "bands", g)
       .select(col("doc_id"), col("band"), col("bv"))
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) enc
-    else enc.join(
-      broadcast(s.read.schema("doc_id BIGINT").parquet(p.toString)),
-      Seq("doc_id"), "left_anti")
+    DedupFamily.tombIds(s, indexDir, g).fold(enc)(t =>
+      enc.join(broadcast(t), Seq("doc_id"), "left_anti"))
   }
 
   /** LOGICAL delete: append ids to `tombstones/`; serving subtracts
     * them immediately, [[dedupIndexCompact]] reclaims the space. A
     * deleted doc stops matching new batches at zero rewrite cost. */
   private[graft] def dedupIndexDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "dedupIndexDelete: ids must be non-empty")
-    import s.implicits._
-    dedupIndexDeleteBody(s, indexDir, ids.toDF("doc_id").coalesce(1))
-  }
+      ids: Seq[Long]): Unit = DedupFamily.delete(s, indexDir, ids)
 
-  /** FRAME-shaped [[dedupIndexDelete]] (the no-collect takedown path,
-    * [[Stores.takedownAll]]'s DataFrame form): the ids never cross the
-    * driver; the tombstone write funnels to one file AFTER whatever
-    * plan computes the ids. Duplicate and absent ids are forgiven by
-    * the serve's anti-join semantics exactly as in the Seq form; an
-    * empty frame appends zero rows (a no-op for every serve). */
+  /** FRAME-shaped [[dedupIndexDelete]] (the no-collect takedown path):
+    * duplicate and absent ids are forgiven by the serve's anti-join
+    * semantics exactly as in the Seq form; an empty frame appends zero
+    * rows (a no-op for every serve). */
   private[graft] def dedupIndexDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    // pinned (r18 advice): the public frame-shaped entry point pins
-    // the caller's frame so a non-deterministic ids plan cannot
-    // tombstone one id set and report another; released once the
-    // write has materialized. Internal pre-pinned callers
-    // (takedownAll) take the …Pinned form below.
-    val pinned = Stores.requireLongIds(ids, "doc_id", "dedupIndexDelete")
-      .localCheckpoint()
-    try dedupIndexDeleteBody(s, indexDir, pinned.repartition(1))
-    finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = DedupFamily.delete(s, indexDir, ids)
 
-  /** [[dedupIndexDelete]] for an ids frame the caller already
-    * validated and pinned ([[Stores.takedownAll]]'s dispatch): skips
-    * the guard+checkpoint the public form pays. */
-  private[operators] def dedupIndexDeletePinned(s: SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    dedupIndexDeleteBody(s, indexDir, ids.repartition(1))
-
-  private def dedupIndexDeleteBody(s: SparkSession, indexDir: String,
-      tombRows: DataFrame): Unit = {
-    Stores.withStoreLock(s, indexDir, "dedupIndexDelete") {
-    tombRows
-      .write.mode("append").parquet(s"$indexDir/${Stores.genName(
-        "tombstones", Stores.currentGen(s, indexDir))}")
-    Stores.bumpStoreVersion(s, indexDir)
-    }
-  }
-
-  /** Compact into the NEXT GENERATION: rewrite the bands to one file
-    * per band directory with tombstones applied physically at a fresh
-    * `bands-g<N+1>` path, then COMMIT with the atomic `gen` pointer
-    * flip (see [[Stores.currentGen]]) — bands and the now-empty
-    * tombstone set change together; the pre-compact generation stays
-    * as the serve grace and this compact vacuums the generations
-    * before it. [[Similarity.ivfPqIndexCompact]]'s repair for the
-    * small-files decay appends cause, on the text store; crash
-    * windows (torn scratch above the pointer / expired generations
-    * below the grace) are classified and repaired by
-    * [[Stores.dedupIndexFsck]]. Purge note: the grace generation
-    * still carries the tombstoned bytes — two back-to-back compacts
-    * give a takedown its physical purge (see
-    * [[Search.searchIndexCompact]]). */
+  /** Compact into the NEXT GENERATION ([[Stores.StoreFamily.compact]]):
+    * the bands rewritten to one file per band directory with
+    * tombstones applied physically — the repair for the small-files
+    * decay appends cause. */
   private[graft] def dedupIndexCompact(s: SparkSession,
-      indexDir: String): Unit =
-      Stores.withStoreLock(s, indexDir, "dedupIndexCompact") {
-    val g = Stores.currentGen(s, indexDir)
-    val ng = g + 1
-    residentBandsAt(s, indexDir, g)
-      .select(col("doc_id"), col("bv"), col("band"))
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$indexDir/${Stores.genName("bands", ng)}")
-    Stores.writeGen(s, indexDir, ng)
-    Stores.vacuumGens(s, indexDir, DedupGenKinds, keepFrom = g)
-  }
+      indexDir: String): Unit = DedupFamily.compact(s, indexDir)
 
-  /** Per-band health report: (band, n_docs, files) — live resident
-    * docs (tombstones subtracted) and parquet files per band directory
-    * (the compaction trigger). Hadoop FS listing, so the report works
-    * wherever the store does. The listing is the authoritative band
-    * set: an all-tombstoned band still reports (0 docs, >0 files). */
+  /** Per-band health report: (band, n_docs, files) — see
+    * [[DedupFamily.stats]]. */
   private[graft] def dedupIndexStats(s: SparkSession,
-      indexDir: String): DataFrame = {
-    val g = Stores.currentGen(s, indexDir)
-    val root = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("bands", g)}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
-      s"dedupIndexStats: no band dataset under $indexDir — " +
-        "not a store directory (dedupIndexWrite creates bands/)")
-    val counts = residentBandsAt(s, indexDir, g)
-      .groupBy("band").agg(count(lit(1)).as("rows"))
-    val files = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("band="))
-      .map(st => (st.getPath.getName.stripPrefix("band=").toInt,
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))))
-      .toSeq
-    import s.implicits._
-    broadcast(files.toDF("band", "files"))
-      .join(counts, Seq("band"), "left")
-      .select(col("band"),
-        coalesce(col("rows"), lit(0L)).as("n_docs"), col("files"))
-      .orderBy("band")
-  }
+      indexDir: String): DataFrame = DedupFamily.stats(s, indexDir)
 
   /** CONTINUOUS ingestion into the store: each micro-batch of `delta`
     * (idCol, textCol — new ids only) is appended under the frozen
-    * geometry, guarded by the same batch-id LEDGER as
-    * [[Similarity.ivfPqIndexIngest]] (`ingested/batch-<id>/` markers
-    * make checkpoint replays skip already-applied batches — clean
-    * stop/restart never double-appends). Same honest crash window:
-    * dying between the append and its marker replays that batch
-    * at-least-once; the repair is [[dedupIndexDelete]] of the
-    * duplicate ids + [[dedupIndexCompact]], or a rebuild. This is the
-    * crawler loop at 100 TB/day: stream in, appends accrete,
-    * compaction amortizes, and the resident state SURVIVES the JVM. */
+    * geometry, guarded by the batch-id ledger
+    * ([[Stores.StoreFamily.ingest]]). This is the crawler loop at
+    * 100 TB/day: stream in, appends accrete, compaction amortizes, and
+    * the resident state SURVIVES the JVM. */
   private[graft] def dedupIndexIngest(delta: DataFrame, indexDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     checkDedupManifest(delta.sparkSession, indexDir)
-    delta.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-        val marker =
-          new org.apache.hadoop.fs.Path(s"$indexDir/ingested/batch-$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            dedupIndexAppend(batch, indexDir, idCol, textCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // the next replay would double-append — fail the batch loudly
-          require(fs.mkdirs(marker),
-            s"dedupIndexIngest: ledger marker create failed: $marker")
-        }
-        ()
-      }
-      .start()
+    DedupFamily.ingest(delta, indexDir, checkpointDir)(
+      dedupIndexAppend(_, indexDir, idCol, textCol))
   }
 
-  /** The store MAINTENANCE POLICY — [[Similarity.ivfPqIndexMaintain]]'s
-    * decision layer on the text store: per band, (band, n_docs, files,
-    * tomb, action) where action is `compact` when the band directory's
-    * file count exceeds `maxFiles` (append/ingest small-file accretion)
-    * or the tombstoned-row share of the band exceeds `maxTombBp`
-    * (dead rows every serve's anti-join still subtracts), else `ok`.
-    * No retrain action: the banding has no trained state to rebalance
-    * — band occupancy is fixed at NumBands by construction, which is
-    * exactly why the text policy is simpler than the ANN one.
-    * `execute = true` runs [[dedupIndexCompact]] when any band decides
-    * `compact` (whole-store by construction; serve-identical,
-    * spec-pinned). */
+  /** The store MAINTENANCE POLICY ([[Stores.StoreFamily.maintain]]) on
+    * the text store: per band, (band, n_docs, files, tomb, action). No
+    * retrain action: the banding has no trained state to rebalance —
+    * band occupancy is fixed at NumBands by construction, which is
+    * exactly why the text policy is simpler than the ANN one. */
   private[graft] def dedupIndexMaintain(s: SparkSession,
       indexDir: String, maxFiles: Int = 8, maxTombBp: Long = 2000L,
-      execute: Boolean = false): DataFrame = {
-    require(maxFiles >= 1 && maxTombBp >= 0,
-      "dedupIndexMaintain: maxFiles >= 1, maxTombBp >= 0")
-    val gM = Stores.currentGen(s, indexDir)
-    val raw = s.read.schema(DedupBandSchema)
-      .parquet(s"$indexDir/${Stores.genName("bands", gM)}")
-    val tombP = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", gM)}")
-    val tombFs = tombP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dead =
-      if (!tombFs.exists(tombP)) raw.filter(lit(false))
-      else raw.join(
-        broadcast(s.read.schema("doc_id BIGINT").parquet(tombP.toString)),
-        Seq("doc_id"), "left_semi")
-    val tomb = dead.groupBy("band").agg(count(lit(1)).as("tomb"))
-    val report = dedupIndexStats(s, indexDir)
-      .join(tomb, Seq("band"), "left")
-      .select(col("band"), col("n_docs"), col("files"),
-        coalesce(col("tomb"), lit(0L)).as("tomb"))
-      .withColumn("action",
-        when(col("files") > maxFiles
-          || (col("n_docs") + col("tomb") > 0
-            && col("tomb") * 10000L
-               > lit(maxTombBp) * (col("n_docs") + col("tomb"))),
-          "compact").otherwise("ok"))
-      .orderBy("band")
-    if (execute) {
-      val decided = report.collect()
-      if (decided.exists(_.getAs[String]("action") == "compact"))
-        dedupIndexCompact(s, indexDir)
-      import s.implicits._
-      decided.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-          r.getLong(3), r.getString(4)))
-        .toSeq.toDF("band", "n_docs", "files", "tomb", "action")
-    } else report
-  }
+      execute: Boolean = false): DataFrame =
+    DedupFamily.maintain(s, indexDir, maxFiles, maxTombBp, execute)
 
-  /** Validate a store's manifest against this library's frozen banding
-    * geometry — a store written under a DIFFERENT banding would not
-    * error on its own: the (band, bv) equality join would simply match
-    * almost nothing and admit near-duplicates with full confidence,
-    * the silent-wrong failure mode the ANN manifest guard exists for.
-    * A pre-manifest store (no `manifest/`) skips validation. */
-  private def checkDedupManifest(s: SparkSession, indexDir: String): Unit =
+  /** Validate a store's manifest against this library's frozen
+    * geometry `want` — a store written under a DIFFERENT banding would
+    * not error on its own: the (band, bv) equality join would simply
+    * match almost nothing and admit near-duplicates (or audit
+    * candidates from another band space) with full confidence, the
+    * silent-wrong failure mode the ANN manifest guard exists for. A
+    * pre-manifest store (no `manifest`) skips validation. */
+  private def checkGeometry(s: SparkSession, indexDir: String,
+      want: Seq[(String, String)], risk: String): Unit =
     Stores.readMetaSidecar(s, s"$indexDir/manifest").foreach { m =>
-      val got = (m("shingle_k").toInt, m("n_hashes").toInt,
-        m("bands").toInt, m("rows_per_band").toInt)
-      val want = (DedupShingleK, DedupNumHashes, DedupNumBands,
-        DedupRowsPerBand)
-      require(got == want,
-        s"store at $indexDir was written with (shingle_k, n_hashes, " +
-          s"bands, rows_per_band)=$got — this library bands with " +
-          s"$want; a mismatched geometry would silently admit dups")
+      val got = want.map(kv => m(kv._1).toInt)
+      def tuple(vs: Seq[Any]) = vs.mkString("(", ",", ")")
+      require(got == want.map(_._2.toInt),
+        s"store at $indexDir was written with " +
+          s"${want.map(_._1).mkString("(", ", ", ")")}=${tuple(got)} — " +
+          s"this library expects ${tuple(want.map(_._2))}; a mismatched " +
+          s"geometry would $risk")
     }
+
+  private def checkDedupManifest(s: SparkSession, indexDir: String): Unit =
+    checkGeometry(s, indexDir, dedupGeometry, "silently admit dups")
 
   /** Cheap driver-side version key of the corpus behind `dir`: the
     * documents dataset's file listing (name:length:mtime per file,
@@ -1758,17 +1617,8 @@ object TextDedup {
 
   private[graft] def resetDiskDedupMemo(): Unit = diskDedupDirs.clear()
 
-  private[graft] def diskDedupDir(s: SparkSession, dir: String): String = {
-    val fp = corpusFingerprint(s, dir)
-    val hit = diskDedupDirs.get(dir)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      // build OUTSIDE the map bin (r21 advice #4: a multi-job store
-      // build inside computeIfAbsent blocks every other key in the
-      // bin for the build's duration) — the CacheRegistry
-      // probe-then-put discipline; a racing duplicate build is benign
-      // (both produce equivalent stores; the loser's dir is deleted)
-      val out = Stores.storeScratchDir(s, "graft-dedupidx-q184")
+  private[graft] def diskDedupDir(s: SparkSession, dir: String): String =
+    memoStore(s, dir, diskDedupDirs, "graft-dedupidx-q184")(()) { out =>
       val gate = graft.plans.HexWindowToLong.md5Bucket(col("doc_id"), 100)
       val bands = bandsOf(signatures(s, dir).filter(gate < 95))
       // bootstrap shuffles sized from the band frame being written
@@ -1776,33 +1626,49 @@ object TextDedup {
       Stores.withBootstrapShuffle(s, Seq(bands)) {
         dedupIndexWriteBands(bands, out)
       }
-      val prev = diskDedupDirs.put(dir, (fp, out))
-      // a stale store was evicted (corpus overwritten in place, or a
-      // racing build lost): delete it — no registry frame binds to
-      // the dedup store (serves construct from the dir string), so
-      // the delete needs no registry drop here
+    }
+
+  /** The corpus-fingerprint-keyed memo of the dedup and audit stores:
+    * the memoized store while the corpus behind `dir` is unchanged
+    * ([[corpusFingerprint]]), else a fresh `build` into a new
+    * [[Stores.storeScratchDir]] — OUTSIDE the map bin (a multi-job store
+    * build inside computeIfAbsent blocks every other key in the bin for
+    * the build's duration), the CacheRegistry probe-then-put
+    * discipline. The evicted store (corpus overwritten in place, or a
+    * racing duplicate build that lost — benign, both stores are
+    * equivalent) is deleted; `onStale` runs first when a memoized store
+    * is about to be replaced. */
+  private def memoStore(s: SparkSession, dir: String,
+      memo: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
+      prefix: String)(onStale: => Unit)(build: String => Unit): String = {
+    val fp = corpusFingerprint(s, dir)
+    val hit = memo.get(dir)
+    if (hit != null && hit._1 == fp) hit._2
+    else {
+      if (hit != null) onStale
+      val out = Stores.storeScratchDir(s, prefix)
+      build(out)
+      val prev = memo.put(dir, (fp, out))
       if (prev != null && prev._2 != out) deleteEvictedStore(s, prev._2)
       out
     }
   }
 
   // ──────────────── ON-DISK LSH AUDIT (PAIR) STORE ────────────────
-  // The r19 verdict's #1: the verified jaccard pair set and the LSH
-  // candidate set — the artifacts the whole decision layer consumes
-  // (q117/q144's audit, q89's connected components and its q173/q174/
-  // q175/q177 consumers, q121's candidate graph) — were the last large
-  // resident retrieval state with no persisted form: every new session
-  // rebuilt them through the repo's longest sequential cache chain
-  // (21 first-touch jobs). This store persists BOTH sets, bucket-
-  // partitioned by doc_i, so a session (or a downstream audit service)
-  // reads two pruned parquet scans instead of re-deriving the chain.
+  // The verified jaccard pair set and the LSH candidate set — the
+  // artifacts the whole decision layer consumes (q117/q144's audit,
+  // q89's connected components and its q173/q174/q175/q177 consumers,
+  // q121's candidate graph) — persisted, so a session (or a downstream
+  // audit service) reads two pruned parquet scans instead of
+  // re-deriving the repo's longest sequential cache chain (21
+  // first-touch jobs). Both sets are bucket-partitioned by doc_i.
   //
   // Layout and 100 TB posture: pair rows are (doc_i < doc_j) with
   // doc_i the min endpoint; `bk = xxhash64(doc_i) mod AuditBuckets`
   // is the partition directory, so a point membership probe ("was
   // (i, j) verified?") prunes to one bucket, writes land one file per
-  // bucket per mutation (the small-file discipline of the other three
-  // stores), and the sets — |survivors| and |band collisions|, both
+  // bucket per mutation (the small-file discipline of every store
+  // family), and the sets — |survivors| and |band collisions|, both
   // orders of magnitude below corpus² by LSH's design — spread evenly
   // (doc_i is a hash-mixed id). A doc-level takedown tombstones a DOC
   // id and the serve subtracts pairs on EITHER endpoint: the doc_j
@@ -1810,19 +1676,16 @@ object TextDedup {
   // which is the documented trade for single-copy storage — compact
   // applies tombstones physically.
   //
-  // NOT a [[Stores.StoreRef]] family member, deliberately: the
-  // StoreRef families are DOC stores ([[Stores.appendAll]] derives
-  // each family's delta from the doc batch itself). The audit store
-  // holds DERIVED pair artifacts — a doc batch's pair delta needs the
-  // resident shingle arrays (which live in the dedup pipeline, not
-  // here), so appends take the pair/cand deltas the pipeline's own
-  // ingest verification produces ([[auditStoreAppend]]). A compliance
-  // takedown composes: run [[Stores.takedownAll]] over the doc-store
-  // families, then [[auditStoreDelete]] with the same ids frame.
-
-  /** Per-generation artifacts: the verified pair set, the candidate
-    * set, and the doc-id tombstones a compact folds in. */
-  private[graft] val AuditGenKinds = Seq("pairs", "cand", "tombstones")
+  // A [[Stores.StoreFamily]] like the doc stores, but NOT a
+  // [[Stores.StoreRef]], deliberately: the StoreRef families are DOC
+  // stores ([[Stores.appendAll]] derives each family's delta from the
+  // doc batch itself). The audit store holds DERIVED pair artifacts —
+  // a doc batch's pair delta needs the resident shingle arrays (which
+  // live in the dedup pipeline, not here), so appends take the
+  // pair/cand deltas the pipeline's own ingest verification produces
+  // ([[auditStoreAppend]]). A compliance takedown composes: run
+  // [[Stores.takedownAll]] over the doc-store families, then
+  // [[auditStoreDelete]] with the same ids frame.
 
   /** Bucket count of the doc_i hash partitioning. Fixed in the
     * manifest: a future bucket change must rebuild, not mis-prune. */
@@ -1832,68 +1695,85 @@ object TextDedup {
     * the no-schema-inference discipline ([[DedupBandSchema]]). Types
     * are normalized AT THE WRITER, so both jaccard branches (count
     * long vs size int) land identically. */
-  // private[graft]: Stores.auditStoreFsck reads both datasets with
-  // these same declared schemas — one constant per dataset, so a
-  // schema change cannot silently diverge from fsck's read
   private[graft] val AuditPairSchema =
     "doc_i BIGINT, doc_j BIGINT, n_common BIGINT, n_i INT, n_j INT, " +
       "jaccard DOUBLE, bk INT"
   private[graft] val AuditCandSchema = "doc_i BIGINT, doc_j BIGINT, bk INT"
 
+  /** The audit store family: the verified pair set, the candidate set
+    * and the doc-id tombstones a compact folds in, per generation. */
+  private[graft] object AuditFamily extends Stores.StoreFamily(
+      name = "auditStore", genKinds = Seq("pairs", "cand", "tombstones"),
+      datasets = Seq("pairs", "cand"), partCol = "bk", idCol = "doc_id") {
+
+    def partitions(s: SparkSession, dir: String): Int = {
+      checkAuditManifest(s, dir)
+      AuditBuckets
+    }
+
+    def schema(kind: String): String =
+      if (kind == "pairs") AuditPairSchema else AuditCandSchema
+
+    def liveRows(s: SparkSession, dir: String, g: Long,
+        kind: String): DataFrame =
+      withAuditBk(residentAuditAt(s, dir, g, kind))
+
+    /** A replayed delta double-counts: duplicate pairs skew the audit's
+      * recall exactly the way duplicate candidates skew q188's
+      * n_cand/precision — one report-only check per dataset. */
+    val dupChecks: Seq[Stores.DupCheck] = Seq(
+      ("pairs", "dup-pairs", "pairs", "verified pair set"),
+      ("cand", "dup-cands", "candidates", "candidate set")).map {
+      case (kind, label, noun, from) => Stores.DupCheck(kind,
+        Seq("doc_i", "doc_j"), None, label, noun,
+        s"report-only: rebuild from the pipeline's $from " +
+          "(auditStoreWrite), or auditStoreDelete the affected docs " +
+          "and compact")
+    }
+
+    val appendRepair: String =
+      "rebuild from the pipeline's verified pair and candidate sets " +
+        "(auditStoreWrite) — the delta may have reached pairs/ but not cand/"
+  }
+
   private def withAuditBk(df: DataFrame): DataFrame =
     df.withColumn("bk",
       pmod(xxhash64(col("doc_i")), lit(AuditBuckets)).cast("int"))
 
-  /** One pair dataset's bucket-partitioned write (shared by write /
-    * append / compact): type-normalize, bucket, one file per bucket. */
-  private def writeAuditSet(rows: DataFrame, path: String,
-      mode: String): Unit =
-    withAuditBk(rows)
-      .repartition(AuditBuckets, col("bk"))
-      .write.mode(mode).partitionBy("bk").parquet(path)
-
   private def normalizedPairs(pairs: DataFrame): DataFrame =
-    pairs.select(col("doc_i").cast("long").as("doc_i"),
+    withAuditBk(pairs.select(col("doc_i").cast("long").as("doc_i"),
       col("doc_j").cast("long").as("doc_j"),
       col("n_common").cast("long").as("n_common"),
       col("n_i").cast("int").as("n_i"), col("n_j").cast("int").as("n_j"),
-      col("jaccard").cast("double").as("jaccard"))
+      col("jaccard").cast("double").as("jaccard")))
 
   private def normalizedCands(cand: DataFrame): DataFrame =
-    cand.select(col("doc_i").cast("long").as("doc_i"),
-      col("doc_j").cast("long").as("doc_j"))
+    withAuditBk(cand.select(col("doc_i").cast("long").as("doc_i"),
+      col("doc_j").cast("long").as("doc_j")))
 
   /** Write the audit store: the verified pair set (q42's full rows —
     * endpoints, intersection stats, jaccard) and the LSH candidate set
     * under `outDir/{pairs,cand}/bk=<b>/…`, with the banding-geometry
     * manifest (candidates are only meaningful in the band space that
-    * generated them) and a fresh corpus-version stamp. Rebuild-safe:
-    * prior-life generations/markers/tombstones are cleared first. */
+    * generated them) and a fresh corpus-version stamp. Rebuild-safe
+    * ([[Stores.StoreFamily.write]]). */
   private[graft] def auditStoreWrite(pairs: DataFrame, cand: DataFrame,
       outDir: String): Unit = {
     val s = pairs.sparkSession
-    Stores.withStoreLock(s, outDir, "auditStoreWrite") {
-      Stores.clearStoreLife(s, outDir, AuditGenKinds)
-      Stores.writeMetaSidecar(s, s"$outDir/manifest", Seq(
-        "shingle_k" -> DedupShingleK.toString,
-        "n_hashes" -> DedupNumHashes.toString,
-        "bands" -> DedupNumBands.toString,
-        "rows_per_band" -> DedupRowsPerBand.toString,
-        "buckets" -> AuditBuckets.toString))
+    AuditFamily.write(s, outDir, auditGeometry) {
       // the two dataset writes are disjoint artifacts off shared
       // upstream caches (shingles/signatures — concurrent
       // materialization is block-lock-safe) — run them CONCURRENTLY
-      // (r22, Stores.inParallel): q117's absorbed build pays one
-      // chain's wall instead of both, and the crash window is
-      // unchanged (either dataset missing at the current generation
-      // is the same fsck "incomplete" verdict + rebuild repair,
-      // whichever half landed)
+      // (Stores.inParallel): q117's absorbed build pays one chain's
+      // wall instead of both, and the crash window is unchanged
+      // (either dataset missing at the current generation is the same
+      // fsck "incomplete" verdict + rebuild repair, whichever half
+      // landed)
       Stores.inParallel(s)(
-        writeAuditSet(normalizedPairs(pairs), s"$outDir/pairs",
-          "overwrite"),
-        writeAuditSet(normalizedCands(cand), s"$outDir/cand",
-          "overwrite"))
-      Stores.writeStoreVersion(s, outDir, 0L)
+        AuditFamily.writeParts(normalizedPairs(pairs), s"$outDir/pairs",
+          AuditBuckets, "overwrite"),
+        AuditFamily.writeParts(normalizedCands(cand), s"$outDir/cand",
+          AuditBuckets, "overwrite"))
     }
   }
 
@@ -1905,20 +1785,16 @@ object TextDedup {
     * aggregate — same class as a re-appended doc id there). Either
     * delta may be empty. Append ≡ rebuild is spec-pinned
     * (AuditStoreSpec) — exact by construction, there is no trained
-    * state. */
+    * state. The pairs land before the candidates: a failure between the
+    * two leaves the append's pending marker, which fsck reports. */
   private[graft] def auditStoreAppend(pairsDelta: DataFrame,
-      candDelta: DataFrame, indexDir: String): Unit = {
-    val s = pairsDelta.sparkSession
-    Stores.withStoreLock(s, indexDir, "auditStoreAppend") {
-      checkAuditManifest(s, indexDir)
-      val g = Stores.currentGen(s, indexDir)
-      writeAuditSet(normalizedPairs(pairsDelta),
-        s"$indexDir/${Stores.genName("pairs", g)}", "append")
-      writeAuditSet(normalizedCands(candDelta),
-        s"$indexDir/${Stores.genName("cand", g)}", "append")
-      Stores.bumpStoreVersion(s, indexDir)
+      candDelta: DataFrame, indexDir: String): Unit =
+    AuditFamily.append(pairsDelta.sparkSession, indexDir) { (g, n) =>
+      AuditFamily.writeParts(normalizedPairs(pairsDelta),
+        AuditFamily.at(indexDir, "pairs", g), n, "append")
+      AuditFamily.writeParts(normalizedCands(candDelta),
+        AuditFamily.at(indexDir, "cand", g), n, "append")
     }
-  }
 
   /** DOC-level logical delete: tombstone the ids; serves subtract
     * every pair touching a tombstoned doc on EITHER endpoint,
@@ -1926,17 +1802,7 @@ object TextDedup {
     * takedown path — ids never cross the driver); guard+pin per the
     * public frame-delete contract. */
   private[graft] def auditStoreDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    val pinned = Stores.requireLongIds(ids, "doc_id", "auditStoreDelete")
-      .localCheckpoint()
-    try Stores.withStoreLock(s, indexDir, "auditStoreDelete") {
-      pinned.repartition(1)
-        .write.mode("append").parquet(s"$indexDir/${Stores.genName(
-          "tombstones", Stores.currentGen(s, indexDir))}")
-      Stores.bumpStoreVersion(s, indexDir)
-    } finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = AuditFamily.delete(s, indexDir, ids)
 
   /** Seq sugar over the frame delete (operator-sized lists). */
   private[graft] def auditStoreDelete(s: SparkSession, indexDir: String,
@@ -1946,25 +1812,10 @@ object TextDedup {
     auditStoreDelete(s, indexDir, ids.toDF("doc_id"))
   }
 
-  /** Compact into the next generation: rewrite both live sets with
-    * tombstones applied physically, commit with the atomic gen-pointer
-    * flip, vacuum the generations before the grace ([[Stores
-    * .currentGen]] snapshot semantics — identical to the other three
-    * stores; two back-to-back compacts purge physically). */
+  /** Compact into the next generation ([[Stores.StoreFamily.compact]]):
+    * both live sets rewritten with tombstones applied physically. */
   private[graft] def auditStoreCompact(s: SparkSession,
-      indexDir: String): Unit =
-    Stores.withStoreLock(s, indexDir, "auditStoreCompact") {
-      val g = Stores.currentGen(s, indexDir)
-      val ng = g + 1
-      writeAuditSet(residentAuditPairsAt(s, indexDir, g)
-          .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard"),
-        s"$indexDir/${Stores.genName("pairs", ng)}", "overwrite")
-      writeAuditSet(residentAuditCandsAt(s, indexDir, g)
-          .select("doc_i", "doc_j"),
-        s"$indexDir/${Stores.genName("cand", ng)}", "overwrite")
-      Stores.writeGen(s, indexDir, ng)
-      Stores.vacuumGens(s, indexDir, AuditGenKinds, keepFrom = g)
-    }
+      indexDir: String): Unit = AuditFamily.compact(s, indexDir)
 
   /** The live verified pair set (tombstones subtracted on both
     * endpoints — broadcast anti-joins, tombstones stay small between
@@ -1972,60 +1823,36 @@ object TextDedup {
   private[graft] def residentAuditPairs(s: SparkSession,
       indexDir: String): DataFrame = {
     checkAuditManifest(s, indexDir)
-    residentAuditPairsAt(s, indexDir, Stores.currentGen(s, indexDir))
+    residentAuditAt(s, indexDir, Stores.currentGen(s, indexDir), "pairs")
   }
 
   /** The live candidate set (same tombstone semantics). */
   private[graft] def residentAuditCands(s: SparkSession,
       indexDir: String): DataFrame = {
     checkAuditManifest(s, indexDir)
-    residentAuditCandsAt(s, indexDir, Stores.currentGen(s, indexDir))
+    residentAuditAt(s, indexDir, Stores.currentGen(s, indexDir), "cand")
   }
 
-  private def residentAuditPairsAt(s: SparkSession, indexDir: String,
-      g: Long): DataFrame =
-    subtractAuditTombstones(s, indexDir, g,
-      s.read.schema(AuditPairSchema)
-        .parquet(s"$indexDir/${Stores.genName("pairs", g)}")
-        .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard"))
-
-  private def residentAuditCandsAt(s: SparkSession, indexDir: String,
-      g: Long): DataFrame =
-    subtractAuditTombstones(s, indexDir, g,
-      s.read.schema(AuditCandSchema)
-        .parquet(s"$indexDir/${Stores.genName("cand", g)}")
-        .select("doc_i", "doc_j"))
-
-  private def subtractAuditTombstones(s: SparkSession, indexDir: String,
-      g: Long, rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) rows
-    else {
-      val tomb = s.read.schema("doc_id BIGINT").parquet(p.toString)
-      rows
-        .join(broadcast(tomb.select(col("doc_id").as("doc_i"))),
-          Seq("doc_i"), "left_anti")
-        .join(broadcast(tomb.select(col("doc_id").as("doc_j"))),
-          Seq("doc_j"), "left_anti")
-    }
+  private def residentAuditAt(s: SparkSession, indexDir: String, g: Long,
+      kind: String): DataFrame = {
+    val rows = AuditFamily.read(s, indexDir, kind, g).select(
+      (if (kind == "pairs")
+        Seq("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard")
+      else Seq("doc_i", "doc_j")).map(col): _*)
+    AuditFamily.tombIds(s, indexDir, g).fold(rows)(tomb => rows
+      .join(broadcast(tomb.select(col("doc_id").as("doc_i"))),
+        Seq("doc_i"), "left_anti")
+      .join(broadcast(tomb.select(col("doc_id").as("doc_j"))),
+        Seq("doc_j"), "left_anti"))
   }
 
   private def checkAuditManifest(s: SparkSession,
       indexDir: String): Unit =
-    Stores.readMetaSidecar(s, s"$indexDir/manifest").foreach { m =>
-      val got = (m("shingle_k").toInt, m("n_hashes").toInt,
-        m("bands").toInt, m("rows_per_band").toInt, m("buckets").toInt)
-      val want = (DedupShingleK, DedupNumHashes, DedupNumBands,
-        DedupRowsPerBand, AuditBuckets)
-      require(got == want,
-        s"audit store at $indexDir was written with (shingle_k, " +
-          s"n_hashes, bands, rows_per_band, buckets)=$got — this " +
-          s"library expects $want; a mismatched geometry would audit " +
-          "candidates from a different band space (or mis-prune " +
-          "bucket probes)")
-    }
+    checkGeometry(s, indexDir, auditGeometry, "audit candidates from a " +
+      "different band space (or mis-prune bucket probes)")
+
+  private def auditGeometry: Seq[(String, String)] =
+    dedupGeometry :+ ("buckets" -> AuditBuckets.toString)
 
   /** The on-disk audit store behind the whole LSH-audit family — built
     * once per (corpus dir, corpus version) from the chain computations
@@ -2071,33 +1898,22 @@ object TextDedup {
     dirs.foreach(deleteEvictedStore(s, _))
   }
 
-  private[graft] def diskAuditDir(s: SparkSession, dir: String): String = {
-    val fp = corpusFingerprint(s, dir)
-    val hit = diskAuditDirs.get(dir)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      // drop the session's store-bound frames BEFORE building: they
-      // were constructed over the store about to be evicted, and a
-      // consumer landing between the build and a later drop could
-      // still scan the deleted directory
-      if (hit != null) AuditDependentPrefixes.foreach(
-        graft.CacheRegistry.releaseByPrefix(s, _))
-      // build OUTSIDE the map bin (r21 advice #4) — the CacheRegistry
-      // probe-then-put discipline; a racing duplicate build is benign
-      val out = Stores.storeScratchDir(s, "graft-auditidx-q188")
-      Stores.withBootstrapShuffle(s,
-        Seq(T(s, dir, "documents"))) {
+  private[graft] def diskAuditDir(s: SparkSession, dir: String): String =
+    // a stale store's session frames are dropped BEFORE the rebuild:
+    // they were constructed over the store about to be evicted, and a
+    // consumer landing between the build and a later drop could still
+    // scan the deleted directory
+    memoStore(s, dir, diskAuditDirs, "graft-auditidx-q188")(
+        AuditDependentPrefixes.foreach(
+          graft.CacheRegistry.releaseByPrefix(s, _))) { out =>
+      Stores.withBootstrapShuffle(s, Seq(T(s, dir, "documents"))) {
         // the build computes from the CHAIN directly (the registry
-        // caches now read through this store — calling them here
-        // would recurse); at bench scale the chain materialization
-        // folds into the first bucket-partitioned write under the
-        // one-partition bootstrap
+        // caches read through this store — calling them here would
+        // recurse); at bench scale the chain materialization folds into
+        // the first bucket-partitioned write under the one-partition
+        // bootstrap
         auditStoreWrite(chainJaccardPairs(s, dir),
           chainCandidatePairs(s, dir), out)
       }
-      val prev = diskAuditDirs.put(dir, (fp, out))
-      if (prev != null && prev._2 != out) deleteEvictedStore(s, prev._2)
-      out
     }
-  }
 }

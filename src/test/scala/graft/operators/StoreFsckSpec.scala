@@ -262,6 +262,40 @@ class StoreFsckSpec extends SparkTestBase {
     mv(idx, "cand-hidden", "cand")
   }
 
+  test("an audit append that fails after its pairs land is reported " +
+      "as a torn append until a rebuild; a later append cannot hide it") {
+    def pairRows(ps: (Long, Long)*) =
+      ps.toSeq.toDF("doc_i", "doc_j")
+        .select(col("doc_i"), col("doc_j"), lit(4L).as("n_common"),
+          lit(6).as("n_i"), lit(6).as("n_j"), lit(0.5).as("jaccard"))
+    def cands(ps: (Long, Long)*) = ps.toSeq.toDF("doc_i", "doc_j")
+    def torn(idx: String): Map[String, (String, String)] =
+      fsckMap(idx, execute = false).filter(_._1.startsWith("torn append"))
+    val idx = tmp()
+    TextDedup.auditStoreWrite(pairRows((1L, 2L)), cands((1L, 2L)), idx)
+    // the cand delta fails inside its write job, after the pairs landed
+    val failing = cands((5L, 6L)).select(col("doc_i"),
+      when(col("doc_j") >= 0L, raise_error(lit("cand delta lost")))
+        .otherwise(col("doc_j")).cast("long").as("doc_j"))
+    intercept[Exception](
+      TextDedup.auditStoreAppend(pairRows((5L, 6L)), failing, idx))
+    assert(TextDedup.residentAuditPairs(spark, idx).count() == 2L,
+      "fixture: the pairs delta landed, the cand delta did not")
+    val report = torn(idx)
+    assert(report.size == 1 &&
+        report.head._2._1.contains("op=auditStoreAppend") &&
+        report.head._2._2.startsWith("report-only"),
+      s"fsck must report the torn append: ${fsckMap(idx, execute = false)}")
+    // report-only: execute = true repairs nothing here
+    fsckMap(idx)
+    assert(torn(idx).keySet == report.keySet)
+    TextDedup.auditStoreAppend(pairRows((7L, 8L)), cands((7L, 8L)), idx)
+    assert(torn(idx).keySet == report.keySet,
+      "a later successful append must not hide the torn one")
+    TextDedup.auditStoreWrite(pairRows((1L, 2L)), cands((1L, 2L)), idx)
+    assert(torn(idx).isEmpty, "a rebuild clears the torn-append marker")
+  }
+
   test("ANN fsck deletes a torn compact scratch; the served top-k is " +
       "unchanged") {
     def codesDf =
