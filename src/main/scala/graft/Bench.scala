@@ -12,8 +12,9 @@ object Bench {
     * resident against a pressured storage pool for the whole run).
     *
     * HAND-PASTED from `tools.ReleasePlan` output; `BenchReleaseSpec`
-    * re-derives the plan from the real query definitions each build and
-    * fails on any drift, so this list cannot silently rot. */
+    * re-derives the plan from the real query definitions each build
+    * ([[deriveLedger]]) and fails on any drift, so this list cannot
+    * silently rot. */
   val releaseAfter: Map[String, Seq[String]] = Map(
     "q116_hybrid_rrf" -> Seq("bm25"),
     "q126_countmin_audit" -> Seq("cms-hashed"),
@@ -35,71 +36,80 @@ object Bench {
     "q99_decontam_clean" -> Seq("shingles"),
   )
 
-  /** Derive each cache key-prefix's LAST consumer by replaying plan
-    * construction of every query in Bench's sorted order with the
-    * registry's access hook armed. Plan construction launches no Spark
-    * jobs outside the eager-by-design constructors pinned (exactly) in
-    * PlanConstructionSpec (connector write, ANALYZE, the three
-    * iterative materializers, the on-disk store builds+probes): the
-    * one data-adaptive constructor — the
-    * jaccard-pairs branch probe — is pinned to its `count` branch here
-    * via [[graft.operators.TextDedup.BranchConf]], which is
-    * lifecycle-safe because both branches consume the same cached
-    * inputs (also spec-pinned). Bench itself does NOT call this
-    * (a pre-pass would move cache builds out of the timed sections and
-    * silently change the methodology BASELINE.md records).
+  /** Replay plan construction of every query in Bench's sorted order,
+    * as a cold run would see it: the store memo is reset first, and
+    * `onAccess(query, prefix)` hears every registry access with the key
+    * prefix (the part before ':'). `onQuery(name)` runs ahead of each
+    * constructor. The caller supplies a cold registry
+    * (`CacheRegistry.clear`): a nested access (a build closure calling
+    * `cached` for its own input) fires the hook only while the build
+    * actually runs, so a warm registry attributes every nested build to
+    * its first DIRECT consumer (measured: jaccard-pairs flips q173 →
+    * q42 warm).
     *
-    * Scale-invariance assumption: the derivation replays at whatever
-    * `sfDir` the caller passes (the spec uses sf0.001) while Bench runs
-    * at sf0.1 — valid because no query's set of `cached` KEYS depends
-    * on the data (the only data-dependent plan branch is the jaccard
-    * probe, whose branches share their cache keys). A future query
-    * whose cache accesses vary with scale would break this silently;
-    * keep data-dependent branching behind key-invariant gates. */
-  private[graft] def deriveReleasePlan(
-      spark: SparkSession, sfDir: String): Map[String, Seq[String]] = {
-    val last = scala.collection.mutable.LinkedHashMap[String, String]()
+    * Plan construction launches no Spark jobs outside the eager-by-design
+    * constructors pinned (exactly) in PlanConstructionSpec. The one
+    * data-adaptive constructor — the jaccard-pairs branch probe — is
+    * pinned to its `count` branch via
+    * [[graft.operators.TextDedup.BranchConf]], lifecycle-safe because
+    * both branches consume the same cached inputs (also spec-pinned);
+    * the LM broadcast branch is pinned "on" likewise.
+    *
+    * Scale-invariance assumption: the replay runs at whatever `sfDir`
+    * the caller passes (the specs use sf0.001) while Bench runs at
+    * sf0.1 — valid because no query's set of `cached` KEYS depends on
+    * the data. A future query whose cache accesses vary with scale
+    * would break this silently; keep data-dependent branching behind
+    * key-invariant gates. */
+  private[graft] def replayConstruction(spark: SparkSession, sfDir: String,
+      onQuery: String => Unit = _ => ())(
+      onAccess: (String, String) => Unit): Unit = {
+    graft.operators.Stores.resetStoreMemos(spark)
     var current = ""
-    val bc = graft.operators.TextDedup.BranchConf
-    val prevBranch = spark.conf.getOption(bc)
-    spark.conf.set(bc, "count")
-    val lmc = graft.operators.Curation.LmBroadcastConf
-    val prevLm = spark.conf.getOption(lmc)
-    spark.conf.set(lmc, "on")
-    // replay against a COLD disk-index memo: in the bench JVM q182
-    // builds the index (touching the model-frame caches) and q183
-    // memo-hits — a warm memo here would skip the build and derive a
-    // different (wrong) last consumer for pq-book/ivf-cent
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
-    try CacheRegistry.withAccessHook(
-      (k: String) => last(k.takeWhile(_ != ':')) = current) {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        current = name
-        fn(spark, sfDir)
-      }
-    } finally {
-      prevBranch match {
-        case Some(v) => spark.conf.set(bc, v)
-        case None => spark.conf.unset(bc)
-      }
-      prevLm match {
-        case Some(v) => spark.conf.set(lmc, v)
-        case None => spark.conf.unset(lmc)
+    withConf(spark, graft.operators.TextDedup.BranchConf -> "count",
+        graft.operators.Curation.LmBroadcastConf -> "on") {
+      CacheRegistry.withAccessHook(
+          (k: String) => onAccess(current, k.takeWhile(_ != ':'))) {
+        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+          current = name
+          onQuery(name)
+          fn(spark, sfDir)
+        }
       }
     }
-    last.toSeq.groupBy(_._2).map { case (q, kvs) =>
-      q -> kvs.map(_._1).toSeq.sorted
+  }
+
+  /** Both halves of the cache lifecycle ledger from ONE
+    * [[replayConstruction]] pass: each key prefix's LAST consumer,
+    * grouped by query (the [[releaseAfter]] shape), and its FIRST
+    * consumer (the [[buildAbsorbers]] shape). Bench itself does NOT
+    * call this (a pre-pass would move cache builds out of the timed
+    * sections and silently change the methodology BASELINE.md
+    * records).
+    *
+    * The first consumer is recorded during PLAN CONSTRUCTION; a query
+    * whose action materializes only part of the persisted frame (e.g.
+    * a plan whose limit stops after one cache partition) can defer the
+    * rest of the build cost to the NEXT consumer — so the quiet
+    * per-query medians BASELINE.md records alongside the attribution
+    * table are the runtime confirmation. */
+  private[graft] def deriveLedger(spark: SparkSession, sfDir: String)
+      : (Map[String, Seq[String]], Map[String, String]) = {
+    val first = scala.collection.mutable.LinkedHashMap[String, String]()
+    val last = scala.collection.mutable.LinkedHashMap[String, String]()
+    replayConstruction(spark, sfDir) { (q, p) =>
+      if (!first.contains(p)) first(p) = q
+      last(p) = q
     }
+    (last.toSeq.groupBy(_._2).map { case (q, kvs) =>
+      q -> kvs.map(_._1).sorted }, first.toMap)
   }
 
   /** Which query's timed section ABSORBS each cache build in Bench's
     * sorted run order — the other half of the lifecycle ledger
     * ([[releaseAfter]] is the release half). HAND-PASTED from
     * `tools.ReleasePlan` output; `BenchReleaseSpec` re-derives it via
-    * [[deriveFirstConsumers]] and fails on drift, so the attribution
+    * [[deriveLedger]] and fails on drift, so the attribution
     * table BASELINE.md records (the r13 verdict's ask #2) can never
     * silently rot when the inventory changes. */
   private[graft] val buildAbsorbers: Map[String, String] = Map(
@@ -127,69 +137,6 @@ object Bench {
     "vectors" -> "q116_hybrid_rrf",
     "winnow-fp" -> "q146_winnow_pairs",
   )
-
-  /** Derive each cache key-prefix's FIRST consumer in Bench's sorted
-    * run order — the query whose timed section normally ABSORBS the
-    * cache build (the registry builds on first access; sorted order
-    * makes that query deterministic round to round). Same replay
-    * machinery and scale-invariance assumption as
-    * [[deriveReleasePlan]].
-    *
-    * MUST run against a COLD registry: a nested access (a build
-    * closure calling `cached` for its own input) only fires the hook
-    * while the build actually RUNS, so replaying over already-built
-    * frames attributes every nested build to its first DIRECT consumer
-    * instead of the query that triggers the chain (measured:
-    * jaccard-pairs flips q173 → q42 warm). BenchReleaseSpec clears
-    * first; tools.ReleasePlan clears between its two derivations.
-    *
-    * One honest caveat the r13 verdict forced:
-    * this records first access during PLAN CONSTRUCTION; a query whose
-    * action materializes only part of the persisted frame (e.g. a
-    * plan whose limit stops after one cache partition) can defer the
-    * rest of the build cost to the NEXT consumer — so the quiet
-    * per-query medians BASELINE.md records alongside this table are
-    * the runtime confirmation, and the two together let a per-query
-    * driver delta be classified as (cache attribution | wio tide |
-    * real regression) from the repo alone. */
-  private[graft] def deriveFirstConsumers(
-      spark: SparkSession, sfDir: String): Map[String, String] = {
-    val first = scala.collection.mutable.LinkedHashMap[String, String]()
-    var current = ""
-    val bc = graft.operators.TextDedup.BranchConf
-    val prevBranch = spark.conf.getOption(bc)
-    spark.conf.set(bc, "count")
-    val lmc = graft.operators.Curation.LmBroadcastConf
-    val prevLm = spark.conf.getOption(lmc)
-    spark.conf.set(lmc, "on")
-    // cold disk-index memos, same reason as deriveReleasePlan: the
-    // absorbers of the q182/q184 index builds must derive as q182/q184
-    // themselves
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
-    try CacheRegistry.withAccessHook(
-      (k: String) => {
-        val p = k.takeWhile(_ != ':')
-        if (!first.contains(p)) first(p) = current
-      }) {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        current = name
-        fn(spark, sfDir)
-      }
-    } finally {
-      prevBranch match {
-        case Some(v) => spark.conf.set(bc, v)
-        case None => spark.conf.unset(bc)
-      }
-      prevLm match {
-        case Some(v) => spark.conf.set(lmc, v)
-        case None => spark.conf.unset(lmc)
-      }
-    }
-    first.toMap
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -104,23 +104,19 @@ object Scrub {
       // multi-threaded driver should construct this query's plan under
       // external serialization, or on a cloned session
       // (SparkSession.cloneSession inherits confs copy-on-write).
-      val capConfs = Seq(
+      val raised = Seq(
         "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expected,
         "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> bits)
-      val saved = capConfs.map { case (c, _) => c -> spark.conf.get(c) }
-      val sketch: Array[Byte] =
-        try {
-          capConfs.foreach { case (c, needed) =>
-            if (spark.conf.get(c).toLong < needed)
-              spark.conf.set(c, needed.toString)
-          }
-          // the aggregate runs NOW (partial sketches OR-merged map-side)
-          // so the conf window can close; only the final binary reaches
-          // the driver — inherent to any constant/scalar-subquery probe
-          tv.agg(graft.plans.BloomSketch
-            .bloomFilterAgg(xxhash64(col("tok")), expected, bits).as("bf"))
-            .head().getAs[Array[Byte]]("bf")
-        } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
+        .map { case (c, needed) =>
+          c -> math.max(spark.conf.get(c).toLong, needed).toString }
+      val sketch: Array[Byte] = graft.withConf(spark, raised: _*) {
+        // the aggregate runs NOW (partial sketches OR-merged map-side)
+        // so the conf window can close; only the final binary is
+        // collected — inherent to any constant/scalar-subquery probe
+        tv.agg(graft.plans.BloomSketch
+          .bloomFilterAgg(xxhash64(col("tok")), expected, bits).as("bf"))
+          .head().getAs[Array[Byte]]("bf")
+      }
       // might_contain requires its sketch as a constant or scalar
       // subquery; binding the built sketch as a literal keeps the cached
       // result frame re-executable with no dependency on session confs

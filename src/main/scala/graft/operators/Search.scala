@@ -1199,39 +1199,15 @@ object Search {
       .orderBy(col("score").desc, col("doc_id")).limit(topK)
   }
 
-  /** The on-disk index behind q185 — built once per corpus dir into a
-    * process-temp directory (the [[graft.operators.Similarity.diskIndexDir]]
-    * memo contract, including the warm-replay trap: ledger derivations
-    * must [[resetDiskSearchMemo]]). Built INDEPENDENTLY of the registry
-    * caches (one tokenize pass) so the bench ledger is untouched. */
-  private val diskSearchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def resetDiskSearchMemo(): Unit = {
-    diskSearchDirs.clear()
-    diskChunkSearchDirs.clear()
-    coordDirs.clear()
-  }
-
+  /** The on-disk index behind q185: one [[Stores.memoStore]] build per
+    * corpus version, INDEPENDENT of the registry caches (one tokenize
+    * pass), under bootstrap shuffles sized from the corpus. */
   private[graft] def diskSearchDir(s: SparkSession, dir: String): String =
-    memoBuild(s, dir, diskSearchDirs, "graft-searchidx-q185")(
-      searchIndexWrite(_, _))
-
-  /** Build the memoized search store of corpus `dir` into a fresh
-    * [[Stores.storeScratchDir]] with `write(documents, outDir)`, under
-    * bootstrap shuffles sized from the corpus being indexed (the
-    * CC-loop discipline — see Stores.withBootstrapShuffle): the build
-    * is a chain of small actions whose 32-task stages over bench-scale
-    * data were most of q185's absorbed cost. */
-  private def memoBuild(s: SparkSession, dir: String,
-      memo: java.util.concurrent.ConcurrentHashMap[String, String],
-      prefix: String)(write: (DataFrame, String) => Unit): String =
-    memo.computeIfAbsent(dir, _ => {
-      val out = Stores.storeScratchDir(s, prefix)
+    Stores.memoStore(s, dir,
+        Stores.StoreKind("graft-searchidx-q185", Seq("documents"))) { out =>
       val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s, Seq(docs)) { write(docs, out) }
-      out
-    })
+      Stores.withBootstrapShuffle(s, Seq(docs)) { searchIndexWrite(docs, out) }
+    }
 
   /** Packing base for chunk ids in the chunk-level search index:
     * chunk_id = doc_id·base + chunk_idx. Base far above any real
@@ -1277,18 +1253,18 @@ object Search {
         concat_ws(" ", slice(col("ws"), col("k") * 64 + 1, lit(64)))
           .as("chunk_text"))
 
-  /** The on-disk CHUNK-level index behind q186 — same memo contract as
-    * [[diskSearchDir]] (one build per corpus dir, q186's timed section
-    * absorbs it; ledger derivations reset via [[resetDiskSearchMemo]],
-    * which clears BOTH search memos). */
-  private val diskChunkSearchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** The on-disk CHUNK-level index behind q186 — built like
+    * [[diskSearchDir]] over [[chunkCorpus]]. */
   private[graft] def diskChunkSearchDir(s: SparkSession,
       dir: String): String =
-    memoBuild(s, dir, diskChunkSearchDirs, "graft-searchidx-q186")(
-      (docs, out) => searchIndexWrite(chunkCorpus(docs), out,
-        idCol = "chunk_id", textCol = "chunk_text"))
+    Stores.memoStore(s, dir,
+        Stores.StoreKind("graft-searchidx-q186", Seq("documents"))) { out =>
+      val docs = T(s, dir, "documents")
+      Stores.withBootstrapShuffle(s, Seq(docs)) {
+        searchIndexWrite(chunkCorpus(docs), out,
+          idCol = "chunk_id", textCol = "chunk_text")
+      }
+    }
 
   /** The q170/q186 fusion served off an arbitrary (chunk search index,
     * ANN index) pair — q186 reads the pristine builds, q187 the
@@ -1322,9 +1298,10 @@ object Search {
       .limit(10)
   }
 
-  /** The mutated two-store layout behind q187, built ONCE per corpus
-    * dir by the COORDINATION OPS themselves (the memo contract of
-    * [[diskSearchDir]]; q187's timed section absorbs it):
+  /** The mutated two-store layout behind q187, built by the
+    * COORDINATION OPS themselves as one [[Stores.memoStore]] root
+    * (`chunksearch/` and `ann/`) per corpus version of `documents` and
+    * `embeddings`; q187's timed section absorbs it:
     *
     *   1. initial writes over the `doc_id % 3 != 0` corpus slice —
     *      the chunk-level search index and the IVF-PQ index (frozen
@@ -1350,15 +1327,12 @@ object Search {
     * under [[Stores.withBootstrapShuffle]] sized from the corpus —
     * ~25 small actions whose 32-task stages over bench-scale slices
     * were most of q187's absorbed cost (the CC-loop discipline). */
-  private val coordDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def coordStoreDirs(s: SparkSession,
-      dir: String): (String, String) =
-    coordDirs.computeIfAbsent(dir, _ => {
-      val root = Stores.storeScratchDir(s, "graft-coord-q187")
-      val cs = s"$root/chunksearch"
-      val ann = s"$root/ann"
+  private[graft] def coordStoreDirs(s: SparkSession,
+      dir: String): (String, String) = {
+    val root = Stores.memoStore(s, dir, Stores.StoreKind(
+        "graft-coord-q187", Seq("documents", "embeddings"))) { out =>
+      val cs = s"$out/chunksearch"
+      val ann = s"$out/ann"
       val docs = T(s, dir, "documents")
       Stores.withBootstrapShuffle(s,
           Seq(docs, T(s, dir, "embeddings"))) {
@@ -1413,6 +1387,7 @@ object Search {
           searchIndexCompact(s, cs),
           Similarity.ivfPqIndexCompact(s, ann))
       }
-      (cs, ann)
-    })
+    }
+    (s"$root/chunksearch", s"$root/ann")
+  }
 }

@@ -640,46 +640,21 @@ object Similarity {
       ivfCentroids(int8Codes(s, dir), kIvf = 4)
     }
 
-  /** The ON-DISK serving index for the bench inventory's standard
-    * configuration, built once per corpus dir into a process-temp
-    * directory from the SAME registry-cached model frames as
-    * q178–q181 (so disk serving is result-identical to the in-memory
-    * index by construction — the frozen-model write path). A plain
-    * process memo rather than a CacheRegistry frame: the artifact is
-    * a DIRECTORY holding zero executor memory, so the release ledger
-    * has nothing to release; staleness follows the JVM (a corpus
-    * rewrite in a live session needs a fresh process or a manual
-    * remove, the same contract as `Tables.invalidate` documents).
-    * q182 absorbs the build in its timed section — the bench analogue
-    * of the cache-build absorption discipline. */
-  private val diskIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Reset [[diskIndexDir]]'s process memo. The release-plan
-    * derivations ([[graft.Bench.deriveReleasePlan]] /
-    * `deriveFirstConsumers`) replay plan construction and must see
-    * the COLD-JVM lifecycle the real bench runs: with a warm memo
-    * q182 skips its index build, never touches the pq-book/ivf-cent
-    * model frames, and the derived ledger mis-attributes them — the
-    * same warm-replay trap the CacheRegistry derivation documents,
-    * resurfacing through a memo the registry's clear cannot reach.
-    * The index directories themselves are process-temp; the OS owns
-    * their cleanup. */
-  private[graft] def resetDiskIndexMemo(): Unit = diskIdxDirs.clear()
-
+  /** The ON-DISK serving index behind q182/q183/q186, built from the
+    * SAME registry-cached model frames as q178–q181, so disk serving is
+    * result-identical to the in-memory index by construction (the
+    * frozen-model write path). One [[Stores.memoStore]] build per
+    * corpus version of `embeddings`; q182 absorbs it. */
   private[graft] def diskIndexDir(s: SparkSession, dir: String): String =
-    diskIdxDirs.computeIfAbsent(dir, _ => {
-      val out = Stores.storeScratchDir(s, "graft-annidx-q182")
+    Stores.memoStore(s, dir,
+        Stores.StoreKind("graft-annidx-q182", Seq("embeddings"))) { out =>
       val codes = int8Codes(s, dir)
-      // bootstrap shuffles sized from the vectors being indexed
-      // (Stores.withBootstrapShuffle — the CC-loop discipline)
       Stores.withBootstrapShuffle(s, Seq(codes)) {
         ivfPqIndexWrite(codes, out, kIvf = 4, m = 4,
           subDim = 16, k = 8, codebooks = Some(pqBooks(s, dir)),
           centroids = Some(ivfCentroidIdx(s, dir)))
       }
-      out
-    })
+    }
 
   /** The read schema of the on-disk encodings dataset — declared
     * EXPLICITLY on every read because `cell` is a partition DIRECTORY

@@ -615,10 +615,7 @@ object TextDedup {
     // the loop costs zero extra jobs
     val sym = (if (np < symPlan.rdd.getNumPartitions)
       symPlan.coalesce(np) else symPlan).persist(lvl)
-    val confKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(confKey)
-    s.conf.set(confKey, np.toString)
-    try {
+    graft.withConf(s, "spark.sql.shuffle.partitions" -> np.toString) {
     // `cached` is the persisted frame backing the current `labels` view;
     // each round fully materializes the new frame (the changed-count scan
     // touches every partition) BEFORE the previous one is unpersisted, so
@@ -662,7 +659,7 @@ object TextDedup {
     sym.unpersist()
     cached.unpersist()
     out
-    } finally s.conf.set(confKey, prevParts)
+    }
   }
 
   /** Loop-shuffle sizing for [[connectedComponents]]: one partition per
@@ -1556,103 +1553,19 @@ object TextDedup {
   private def checkDedupManifest(s: SparkSession, indexDir: String): Unit =
     checkGeometry(s, indexDir, dedupGeometry, "silently admit dups")
 
-  /** Cheap driver-side version key of the corpus behind `dir`: the
-    * documents dataset's file listing (name:length:mtime per file,
-    * sorted). An in-place corpus overwrite changes it (Spark writes
-    * fresh part-file names), so a memo keyed on it detects staleness
-    * without any Spark job — the r21 verdict's #1 latent-correctness
-    * hazard (the warm-replay trap behind every chain consumer since
-    * the store rewiring), closed at the memo instead of documented at
-    * every call site. One FS listing per memo consult: driver-side
-    * metadata, a few entries at any scale (the corpus dir is a
-    * dataset, not a partition tree). */
-  private def corpusFingerprint(s: SparkSession, dir: String): String = {
-    // the Tables layout: one `documents.parquet` file OR directory
-    // under the scale-factor dir (listStatus on a file returns that
-    // file's own status — both layouts fingerprint)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).map(st =>
-      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
-  /** Recursively delete an evicted store directory this module
-    * created. Only ever called on memo-owned dirs (the memo value is
-    * the dir the build itself created), never on caller paths. */
-  private def deleteEvictedStore(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try fs.delete(p, true) catch {
-      case scala.util.control.NonFatal(_) => () // hygiene, not contract
-    }
-  }
-
-  /** Registry keys bound to the on-disk AUDIT store: the pair caches
-    * read THROUGH it since r21, and dup-cc derives from them. Dropped
-    * for the session whenever the store memo evicts a stale store, so
-    * no frame can keep scanning a deleted directory (the r21 advice:
-    * resetDiskAuditMemo without a registry clear left q117/q42 and
-    * q188 silently divergent after an in-place corpus overwrite). */
-  private val AuditDependentPrefixes =
-    Seq("jaccard-pairs", "lsh-cand", "dup-cc")
-
-  /** The on-disk store behind q184 for the bench inventory — built
-    * once per (corpus dir, corpus version) into a
-    * [[Stores.storeScratchDir]] directory from the SAME registry
-    * signature cache q156 reads (so disk serving is result-identical
-    * by construction), resident side = the md5-gate bk < 95 docs.
-    * Process memo, not a registry frame (a directory holds no
-    * executor memory). Since r22 the memo is keyed on the corpus
-    * FINGERPRINT as well as the dir ([[corpusFingerprint]]): an
-    * in-place corpus overwrite (after the standing
-    * `Tables.invalidate` + `CacheRegistry.clear` discipline) rebuilds
-    * the store on next touch and deletes the evicted one, instead of
-    * silently serving the old corpus — [[resetDiskDedupMemo]] remains
-    * as the explicit hook for ledger derivations (which must replay
-    * builds COLD regardless of corpus staleness). */
-  private val diskDedupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def resetDiskDedupMemo(): Unit = diskDedupDirs.clear()
-
+  /** The on-disk store behind q184, built from the SAME registry
+    * signature cache q156 reads (so disk serving is result-identical by
+    * construction), resident side = the md5-gate bk < 95 docs. One
+    * [[Stores.memoStore]] build per corpus version of `documents`. */
   private[graft] def diskDedupDir(s: SparkSession, dir: String): String =
-    memoStore(s, dir, diskDedupDirs, "graft-dedupidx-q184")(()) { out =>
+    Stores.memoStore(s, dir,
+        Stores.StoreKind("graft-dedupidx-q184", Seq("documents"))) { out =>
       val gate = graft.plans.HexWindowToLong.md5Bucket(col("doc_id"), 100)
       val bands = bandsOf(signatures(s, dir).filter(gate < 95))
-      // bootstrap shuffles sized from the band frame being written
-      // (Stores.withBootstrapShuffle — the CC-loop discipline)
       Stores.withBootstrapShuffle(s, Seq(bands)) {
         dedupIndexWriteBands(bands, out)
       }
     }
-
-  /** The corpus-fingerprint-keyed memo of the dedup and audit stores:
-    * the memoized store while the corpus behind `dir` is unchanged
-    * ([[corpusFingerprint]]), else a fresh `build` into a new
-    * [[Stores.storeScratchDir]] — OUTSIDE the map bin (a multi-job store
-    * build inside computeIfAbsent blocks every other key in the bin for
-    * the build's duration), the CacheRegistry probe-then-put
-    * discipline. The evicted store (corpus overwritten in place, or a
-    * racing duplicate build that lost — benign, both stores are
-    * equivalent) is deleted; `onStale` runs first when a memoized store
-    * is about to be replaced. */
-  private def memoStore(s: SparkSession, dir: String,
-      memo: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
-      prefix: String)(onStale: => Unit)(build: String => Unit): String = {
-    val fp = corpusFingerprint(s, dir)
-    val hit = memo.get(dir)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      if (hit != null) onStale
-      val out = Stores.storeScratchDir(s, prefix)
-      build(out)
-      val prev = memo.put(dir, (fp, out))
-      if (prev != null && prev._2 != out) deleteEvictedStore(s, prev._2)
-      out
-    }
-  }
 
   // ──────────────── ON-DISK LSH AUDIT (PAIR) STORE ────────────────
   // The verified jaccard pair set and the LSH candidate set — the
@@ -1855,57 +1768,20 @@ object TextDedup {
     dedupGeometry :+ ("buckets" -> AuditBuckets.toString)
 
   /** The on-disk audit store behind the whole LSH-audit family — built
-    * once per (corpus dir, corpus version) from the chain computations
-    * ([[chainJaccardPairs]]/[[chainCandidatePairs]] over the shared
-    * shingle/signature caches), under a bootstrap sized from the
-    * documents table (the chain's true input: ~600 KB at sf0.1 →
-    * one-partition bootstrap; at 100 TB → the session's full
-    * parallelism). Since r21 the registry pair caches
-    * ([[jaccardPairs]]/[[lshCandidatePairs]]) read THROUGH this store,
-    * so the first chain consumer (q117 in bench order) absorbs the
-    * build and q188 serves off two pruned bucket scans.
-    *
-    * Since r22 the memo is CORPUS-VERSION-KEYED
-    * ([[corpusFingerprint]]) and self-healing: an in-place corpus
-    * overwrite is detected at the next consult, the session's
-    * store-bound registry frames ([[AuditDependentPrefixes]]) are
-    * dropped FIRST, then the stale store is rebuilt and the evicted
-    * directory deleted — closing both halves of the r21 warm-replay
-    * trap (a stale store silently served; /tmp stranding on reset).
-    * The staleness hook composes with, not replaces, the standing
-    * in-place-rewrite discipline (`Tables.invalidate` +
-    * `CacheRegistry.clear` for the OTHER caches derived from the old
-    * corpus). [[resetDiskAuditMemo]] stays for ledger derivations,
-    * which must replay builds cold on an UNCHANGED corpus — the
-    * session-taking overload also drops the dependent registry keys
-    * and deletes the evicted stores (the r21 advice pairing, now
-    * enforced in one call). Sequential-session caveat unchanged: the
-    * registry drop reaches only the session passed in. */
-  private val diskAuditDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def resetDiskAuditMemo(): Unit = diskAuditDirs.clear()
-
-  /** [[resetDiskAuditMemo]] + the dependent-registry drop + evicted-
-    * store deletion, in the safe order (registry first — a frame must
-    * never outlive the directory it scans). */
-  private[graft] def resetDiskAuditMemo(s: SparkSession): Unit = {
-    AuditDependentPrefixes.foreach(
-      graft.CacheRegistry.releaseByPrefix(s, _))
-    val dirs = new scala.collection.mutable.ArrayBuffer[String]()
-    diskAuditDirs.values().forEach(v => { dirs += v._2; () })
-    diskAuditDirs.clear()
-    dirs.foreach(deleteEvictedStore(s, _))
-  }
-
+    * from the chain computations ([[chainJaccardPairs]]/
+    * [[chainCandidatePairs]] over the shared shingle/signature caches),
+    * under a bootstrap sized from the documents table (the chain's true
+    * input: ~600 KB at sf0.1 → one-partition bootstrap; at 100 TB → the
+    * session's full parallelism). The registry pair caches
+    * ([[jaccardPairs]]/[[lshCandidatePairs]]) and dup-cc read THROUGH
+    * this store, so they are the kind's dependents: a stale store's
+    * frames are dropped before it is rebuilt. The first chain consumer
+    * (q117 in bench order) absorbs the build; q188 serves off two pruned
+    * bucket scans. One [[Stores.memoStore]] build per corpus version of
+    * `documents`. */
   private[graft] def diskAuditDir(s: SparkSession, dir: String): String =
-    // a stale store's session frames are dropped BEFORE the rebuild:
-    // they were constructed over the store about to be evicted, and a
-    // consumer landing between the build and a later drop could still
-    // scan the deleted directory
-    memoStore(s, dir, diskAuditDirs, "graft-auditidx-q188")(
-        AuditDependentPrefixes.foreach(
-          graft.CacheRegistry.releaseByPrefix(s, _))) { out =>
+    Stores.memoStore(s, dir, Stores.StoreKind("graft-auditidx-q188",
+        Seq("documents"), Seq("jaccard-pairs", "lsh-cand", "dup-cc"))) { out =>
       Stores.withBootstrapShuffle(s, Seq(T(s, dir, "documents"))) {
         // the build computes from the CHAIN directly (the registry
         // caches read through this store — calling them here would

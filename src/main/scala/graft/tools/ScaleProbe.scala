@@ -266,14 +266,14 @@ object ScaleProbe {
       val lmc = graft.operators.Curation.LmBroadcastConf
       SparkEntry.queries("q103_unigram_logprob")(spark, dir).count()
       rec("lm_gate_on", nDocs) {
-        spark.conf.set(lmc, "on")
-        try SparkEntry.queries("q103_unigram_logprob")(spark, dir).count()
-        finally spark.conf.unset(lmc)
+        graft.withConf(spark, lmc -> "on") {
+          SparkEntry.queries("q103_unigram_logprob")(spark, dir).count()
+        }
       }
       rec("lm_gate_off", nDocs) {
-        spark.conf.set(lmc, "off")
-        try SparkEntry.queries("q103_unigram_logprob")(spark, dir).count()
-        finally spark.conf.unset(lmc)
+        graft.withConf(spark, lmc -> "off") {
+          SparkEntry.queries("q103_unigram_logprob")(spark, dir).count()
+        }
       }
       val planes = 4 + math.ceil(math.log(m) / math.log(2)).toInt
       // skew discipline: similar vectors co-bucket by design, so planes

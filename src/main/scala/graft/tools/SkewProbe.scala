@@ -77,14 +77,11 @@ object SkewProbe {
           // default — a caller-tuned threshold would otherwise make
           // round 2's "broadcast" variants silently run a different
           // physical regime under the same label
-          val prior = spark.conf.getOption(thresholdKey)
-          spark.conf.set(thresholdKey, "-1")
-          try time(s"untiled_shuffle_r$round") {
-            TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
-              tilePairs = Long.MaxValue).count()
-          } finally prior match {
-            case Some(v) => spark.conf.set(thresholdKey, v)
-            case None => spark.conf.unset(thresholdKey)
+          graft.withConf(spark, thresholdKey -> "-1") {
+            time(s"untiled_shuffle_r$round") {
+              TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
+                tilePairs = Long.MaxValue).count()
+            }
           }
         })
     }
@@ -127,14 +124,11 @@ object SkewProbe {
           TimeSeriesJoins.sessionPairCounts(sess,
             tilePairs = Long.MaxValue).count()
         }, {
-          val prior = spark.conf.getOption(thresholdKey)
-          spark.conf.set(thresholdKey, "-1")
-          try timeS(s"sess_untiled_shuffle_r$round") {
-            TimeSeriesJoins.sessionPairCounts(sess,
-              tilePairs = Long.MaxValue).count()
-          } finally prior match {
-            case Some(v) => spark.conf.set(thresholdKey, v)
-            case None => spark.conf.unset(thresholdKey)
+          graft.withConf(spark, thresholdKey -> "-1") {
+            timeS(s"sess_untiled_shuffle_r$round") {
+              TimeSeriesJoins.sessionPairCounts(sess,
+                tilePairs = Long.MaxValue).count()
+            }
           }
         })
     }

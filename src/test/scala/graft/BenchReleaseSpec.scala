@@ -10,9 +10,17 @@ package graft
   * frames resident past their last use). */
 class BenchReleaseSpec extends SparkTestBase {
 
-  test("releaseAfter matches the derived last-consumer plan") {
+  /** Both ledger halves from ONE cold replay, shared by the two
+    * tests below. */
+  private lazy val derivedLedger = {
     CacheRegistry.clear(spark)
-    val derived = Bench.deriveReleasePlan(spark, "/root/testdata/sf0.001")
+    try Bench.deriveLedger(spark,
+      s"${sys.props("user.home")}/testdata/sf0.001")
+    finally CacheRegistry.clear(spark)
+  }
+
+  test("releaseAfter matches the derived last-consumer plan") {
+    val derived = derivedLedger._1
     // normalize both sides for comparison
     def norm(m: Map[String, Seq[String]]): Map[String, List[String]] =
       m.map { case (q, ks) => q -> ks.toList.sorted }
@@ -20,7 +28,6 @@ class BenchReleaseSpec extends SparkTestBase {
       s"""release plan drift — paste `sbt "runMain graft.tools.ReleasePlan"` output into Bench.releaseAfter
          |derived : ${norm(derived).toSeq.sortBy(_._1).mkString(", ")}
          |declared: ${norm(Bench.releaseAfter).toSeq.sortBy(_._1).mkString(", ")}""".stripMargin)
-    CacheRegistry.clear(spark)
   }
 
   test("buildAbsorbers matches the derived first-consumer attribution") {
@@ -29,13 +36,11 @@ class BenchReleaseSpec extends SparkTestBase {
     // silently becomes a cache's first consumer (shifting which timed
     // section absorbs the build) must fail here, not confuse the next
     // round's per-query delta forensics
-    CacheRegistry.clear(spark)
-    val derived = Bench.deriveFirstConsumers(spark, "/root/testdata/sf0.001")
+    val derived = derivedLedger._2
     assert(derived == Bench.buildAbsorbers,
       s"""attribution drift — paste `sbt "runMain graft.tools.ReleasePlan"` output into Bench.buildAbsorbers
          |derived : ${derived.toSeq.sortBy(_._1).mkString(", ")}
          |declared: ${Bench.buildAbsorbers.toSeq.sortBy(_._1).mkString(", ")}""".stripMargin)
-    CacheRegistry.clear(spark)
   }
 
   test("releaseByPrefix drops only the matching session-owned entries") {

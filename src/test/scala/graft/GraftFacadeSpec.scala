@@ -527,7 +527,7 @@ class GraftFacadeSpec extends SparkTestBase {
     graft.Tables(spark, "/root/testdata/sf0.001", "documents")
     // ... and the AUDIT STORE memo too (r22): since r21 q42's plan
     // reads through the on-disk pair store, so a first-in-JVM (or
-    // post-reset — other suites call resetDiskAuditMemo) touch runs
+    // post-reset — other suites call resetStoreMemos) touch runs
     // the store BUILD's jobs at construction. That bootstrap cost is
     // PlanConstructionSpec's subject; this test pins only that the
     // pinned BRANCH adds no probe job, so construct once untagged to

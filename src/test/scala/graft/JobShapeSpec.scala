@@ -34,10 +34,7 @@ class JobShapeSpec extends SparkTestBase {
     * warm-up discipline), listener drained to quiescence. */
   private def firstTouchJobs(name: String): Int = {
     CacheRegistry.clear(spark)
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
+    graft.operators.Stores.resetStoreMemos(spark)
     Tables.names.foreach(Tables(spark, dir, _))
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -59,10 +56,7 @@ class JobShapeSpec extends SparkTestBase {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       CacheRegistry.clear(spark)
-      graft.operators.Similarity.resetDiskIndexMemo()
-      graft.operators.TextDedup.resetDiskDedupMemo()
-      graft.operators.TextDedup.resetDiskAuditMemo()
-      graft.operators.Search.resetDiskSearchMemo()
+      graft.operators.Stores.resetStoreMemos(spark)
     }
   }
 

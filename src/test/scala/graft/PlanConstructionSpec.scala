@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Pins the rule QueryDef documents: query CONSTRUCTORS are plan
   * definitions, not executions — building a plan launches no Spark
-  * jobs, so `Bench.deriveReleasePlan`, the release spec, and any plan
+  * jobs, so `Bench.replayConstruction`, the release spec, and any plan
   * audit can replay construction for free and Bench's timed/untimed
   * boundary stays sharp.
   *
@@ -65,7 +65,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * constructor — is gated behind TextDedup.BranchConf; this spec pins
   * both that the pinned branches construct job-free AND that the two
   * branches consume identical cache keys, which is what makes
-  * deriveReleasePlan's branch pinning (and its sf0.001-vs-sf0.1
+  * Bench.replayConstruction's branch pinning (and its sf0.001-vs-sf0.1
   * scale-invariance assumption) sound.
   */
 class PlanConstructionSpec extends SparkTestBase {
@@ -97,26 +97,13 @@ class PlanConstructionSpec extends SparkTestBase {
       }
     }
     sc.addSparkListener(listener)
-    // replay against COLD disk-index memos (the deriveReleasePlan
-    // discipline): a store built by an earlier suite in the same
-    // session would memo-hit here and skip its build jobs, flipping
-    // the eager set's exact-equality pin on suite order
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
-    val bc = graft.operators.TextDedup.BranchConf
-    spark.conf.set(bc, "count")
-    // pin the LM broadcast branch the same way: auto's one-time doc
-    // count is a (memoized) constructor job this spec must not charge
-    // to whichever LM query constructs first
-    val lmc = graft.operators.Curation.LmBroadcastConf
-    spark.conf.set(lmc, "on")
     try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        sc.setLocalProperty(TagProp, name)
-        fn(spark, dir)
-      }
+      // the cold replay Bench's ledger derivation walks (store memo
+      // reset, branch pins — the LM pin keeps auto's one-time doc count
+      // from charging to whichever LM query constructs first), tagging
+      // each constructor's jobs with its query
+      Bench.replayConstruction(spark, dir,
+        onQuery = sc.setLocalProperty(TagProp, _))((_, _) => ())
       sc.setLocalProperty(TagProp, null)
       // jobs start synchronously inside the constructors; listener
       // delivery is async — poll until the count quiesces
@@ -128,8 +115,6 @@ class PlanConstructionSpec extends SparkTestBase {
         Thread.sleep(200)
       }
     } finally {
-      spark.conf.unset(bc)
-      spark.conf.unset(lmc)
       sc.setLocalProperty(TagProp, null)
       sc.removeSparkListener(listener)
     }
@@ -146,24 +131,26 @@ class PlanConstructionSpec extends SparkTestBase {
     val bc = graft.operators.TextDedup.BranchConf
     def keysUnder(branch: String): Set[String] = {
       CacheRegistry.clear(spark)
-      // cold audit-store memo per branch: the jaccard-pairs cache reads
-      // through the store since r21, so a memo left warm by the other
+      // cold store memo per branch: the jaccard-pairs cache reads
+      // through the audit store, so a memo left warm by the other
       // branch (or another suite) would skip the build's nested
       // shingles/minhash-sig accesses and fake a key divergence
-      graft.operators.TextDedup.resetDiskAuditMemo()
+      graft.operators.Stores.resetStoreMemos(spark)
       val seen = scala.collection.mutable.LinkedHashSet[String]()
-      spark.conf.set(bc, branch)
-      try CacheRegistry.withAccessHook(
-        (k: String) => seen += k.takeWhile(_ != ':')) {
-        SparkEntry.queries("q42_jaccard_pairs")(spark, "/root/testdata/sf0.001")
-      } finally spark.conf.unset(bc)
+      withConf(spark, bc -> branch) {
+        CacheRegistry.withAccessHook(
+          (k: String) => seen += k.takeWhile(_ != ':')) {
+          SparkEntry.queries("q42_jaccard_pairs")(
+            spark, s"${sys.props("user.home")}/testdata/sf0.001")
+        }
+      }
       seen.toSet
     }
     val ck = keysUnder("count")
     val pk = keysUnder("prefix")
     assert(ck == pk,
       s"branch cache keys diverge (count=$ck prefix=$pk) — " +
-        "deriveReleasePlan's branch pinning would derive a wrong lifecycle")
+        "replayConstruction's branch pinning would derive a wrong lifecycle")
     CacheRegistry.clear(spark)
   }
 

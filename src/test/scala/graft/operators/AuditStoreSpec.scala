@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkTestBase}
@@ -47,7 +47,7 @@ class AuditStoreSpec extends SparkTestBase {
     // and never read the store this test builds, making its half of
     // the pin vacuous
     graft.CacheRegistry.clear(spark)
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     val a = SparkEntry.queries("q188_disk_lsh_audit")(spark, sf)
       .collect().toSeq
     val b = SparkEntry.queries("q117_lsh_recall")(spark, sf)
@@ -66,7 +66,7 @@ class AuditStoreSpec extends SparkTestBase {
   }
 
   test("both persisted sets round-trip the chain computations exactly") {
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     val idx = TextDedup.diskAuditDir(spark, sf)
     val gotPairs = TextDedup.residentAuditPairs(spark, idx)
       .as[(Long, Long, Long, Int, Int, Double)].collect().toSeq.sorted
@@ -93,7 +93,7 @@ class AuditStoreSpec extends SparkTestBase {
     // caches) labels duplicate clusters from the store's pair
     // endpoints alone — same converged labels as the in-memory
     // dup-cc cache the q89/q173/q174/q175 consumers read
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     val idx = TextDedup.diskAuditDir(spark, sf)
     val fromStore = TextDedup.connectedComponents(
         TextDedup.residentAuditPairs(spark, idx)
@@ -110,7 +110,7 @@ class AuditStoreSpec extends SparkTestBase {
   }
 
   test("a point membership probe prunes to ONE bucket partition") {
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     val idx = TextDedup.diskAuditDir(spark, sf)
     val some = TextDedup.residentAuditPairs(spark, idx)
       .select("doc_i", "doc_j").as[(Long, Long)].head()
@@ -135,60 +135,83 @@ class AuditStoreSpec extends SparkTestBase {
       "memo reset (corpus-version-keyed memo, r22), and the evicted " +
       "store directory is deleted") {
     graft.CacheRegistry.clear(spark)
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     val corpus = java.nio.file.Files
       .createTempDirectory("graft-corpus").toString
-    def writeDocs(rows: Seq[(Long, String, String)]): Unit =
-      rows.toDF("doc_id", "text", "source").coalesce(1)
-        .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
-    writeDocs(Seq(
-      (1L, "alpha beta gamma delta epsilon", "src0"),
-      (2L, "alpha beta gamma delta epsilon", "src1"),
-      (3L, "zeta eta theta iota kappa", "src1")))
-    val idx1 = TextDedup.diskAuditDir(spark, corpus)
-    assert(residentPairKeys(idx1) == Seq((1L, 2L)))
-    // overwrite the corpus IN PLACE (fresh part files): docs 2 and 3
-    // are now the duplicate pair. The standing discipline for the
-    // other derived caches still applies (CacheRegistry.clear, which
-    // invalidates Tables too) — but NO resetDiskAuditMemo: the memo
-    // must detect the changed corpus fingerprint by itself. Before
-    // r22 this served the STALE store (the r21 verdict's #1 latent
-    // hazard).
-    writeDocs(Seq(
-      (1L, "alpha beta gamma delta epsilon", "src0"),
-      (2L, "zeta eta theta iota kappa", "src1"),
-      (3L, "zeta eta theta iota kappa", "src1")))
+    // the two tables the six store builds read, copied from the
+    // fixture (filtered by `keep` on the id column)
+    def writeCorpus(keep: Column => Column): Unit =
+      Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
+        case (t, id) => spark.read.parquet(s"$sf/$t.parquet")
+          .filter(keep(col(id))).coalesce(1)
+          .write.mode("overwrite").parquet(s"$corpus/$t.parquet")
+      }
+    def stores(): Map[String, String] = Map(
+      "ann" -> Similarity.diskIndexDir(spark, corpus),
+      "search" -> Search.diskSearchDir(spark, corpus),
+      "chunk search" -> Search.diskChunkSearchDir(spark, corpus),
+      "coordinated pair" -> new java.io.File(
+        Search.coordStoreDirs(spark, corpus)._1).getParent,
+      "dedup" -> TextDedup.diskDedupDir(spark, corpus),
+      "audit" -> TextDedup.diskAuditDir(spark, corpus))
+    def served(idx: String): Seq[Long] =
+      Search.searchIndexServe(spark, idx, Seq("hash", "scan", "filter"),
+        topK = 1000).select("doc_id").as[Long].collect().toSeq
+    writeCorpus(_ => lit(true))
+    val before = stores()
+    val pairs1 = residentPairKeys(before("audit"))
+    assert(pairs1.nonEmpty, "fixture: the corpus has verified pairs")
+    // drop the id residue class of the first pair's doc_i, so the
+    // rewrite removes at least one verified pair
+    val k = pairs1.head._1 % 4
+    def dropped(id: Long): Boolean = id % 4 == k
+    assert(served(before("search")).exists(dropped),
+      "fixture: the search serve returns a doc of the dropped slice")
+    // overwrite BOTH tables IN PLACE (fresh part files). The standing
+    // discipline for the other derived caches still applies
+    // (CacheRegistry.clear, which invalidates Tables too) — but NO
+    // memo reset: each store's memo must detect the changed corpus
+    // fingerprint by itself.
+    writeCorpus(id => pmod(id, lit(4L)) =!= k)
     graft.CacheRegistry.clear(spark)
-    val idx2 = TextDedup.diskAuditDir(spark, corpus)
-    assert(idx2 != idx1, "a changed corpus must build a fresh store")
-    assert(residentPairKeys(idx2) == Seq((2L, 3L)),
+    val after = stores()
+    val kept = before.filter { case (kind, idx1) => after(kind) == idx1 }
+    assert(kept.isEmpty, "a changed corpus must build a fresh store; " +
+      s"still serving the old one: ${kept.keys.toSeq.sorted.mkString(", ")}")
+    val left = before.filter { case (_, idx1) => new java.io.File(idx1).exists }
+    assert(left.isEmpty, "the evicted stale store directory must be " +
+      s"deleted: ${left.keys.toSeq.sorted.mkString(", ")}")
+    assert(!served(after("search")).exists(dropped),
+      "the fresh search store must not serve a dropped doc")
+    val pairs2 = residentPairKeys(after("audit"))
+    val want = TextDedup.chainJaccardPairs(spark, corpus)
+      .select("doc_i", "doc_j").as[(Long, Long)].collect().toSeq.sorted
+    assert(pairs2 == want && pairs2 != pairs1,
       "the fresh store must hold the NEW corpus's pairs")
-    assert(!new java.io.File(idx1).exists,
-      "the evicted stale store directory must be deleted")
+    assert(!pairs2.exists(p => dropped(p._1) || dropped(p._2)))
     graft.CacheRegistry.clear(spark)
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
   }
 
-  test("resetDiskAuditMemo(session) drops the store-bound registry " +
-      "frames and deletes the evicted store dirs (r21 advice pairing)") {
+  test("resetStoreMemos drops dependent frames and deletes the stores") {
     graft.CacheRegistry.clear(spark)
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
     // warm the store AND a dependent registry frame through the
     // public read path
     val nBefore = SparkEntry.queries("q42_jaccard_pairs")(spark, sf).count()
     val idx = TextDedup.diskAuditDir(spark, sf)
     assert(new java.io.File(idx).exists)
     assert(graft.CacheRegistry.liveCount(spark) > 0)
-    TextDedup.resetDiskAuditMemo(spark)
+    Stores.resetStoreMemos(spark)
     assert(!new java.io.File(idx).exists,
-      "the session-taking reset must delete the evicted store")
+      "the reset must delete the evicted store")
     // the dependent frames are gone: a fresh q42 construction builds
     // a NEW store (fresh memo) rather than scanning the deleted dir
     val again = SparkEntry.queries("q42_jaccard_pairs")(spark, sf)
     assert(again.count() == nBefore,
       "a rebuilt store serves the same pairs")
     graft.CacheRegistry.clear(spark)
-    TextDedup.resetDiskAuditMemo()
+    Stores.resetStoreMemos(spark)
   }
 
   test("append serves identically to a full rebuild and bumps the stamp") {

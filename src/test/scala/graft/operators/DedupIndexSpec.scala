@@ -56,7 +56,7 @@ class DedupIndexSpec extends SparkTestBase {
   test("q184 equals q156 row for row at sf0.001") {
     // the metered disk path and the registry path share their oracle;
     // this pins them against each other directly, engine-side
-    TextDedup.resetDiskDedupMemo()
+    Stores.resetStoreMemos(spark)
     val a = SparkEntry.queries("q184_disk_incremental_dedup")(spark, sf)
       .as[(Long, Int, String)].collect().toSeq
     val b = SparkEntry.queries("q156_incremental_dedup")(spark, sf)

@@ -17,7 +17,7 @@ class SearchIndexSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory("graft-searchidx").toString
 
   test("q185 equals q115 row for row (disk serve == in-memory BM25)") {
-    Search.resetDiskSearchMemo()
+    Stores.resetStoreMemos(spark)
     val a = SparkEntry.queries("q185_bm25_disk")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("q115_bm25_topk")(spark, sf)
@@ -31,7 +31,7 @@ class SearchIndexSpec extends SparkTestBase {
     // as a partition filter over literal bkt values: that is the
     // guarantee that only |query terms| directory families of a
     // 100 TB postings store are ever listed
-    Search.resetDiskSearchMemo()
+    Stores.resetStoreMemos(spark)
     val plan = SparkEntry.queries("q185_bm25_disk")(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -427,7 +427,7 @@ class SearchIndexSpec extends SparkTestBase {
     // write -> appendAll -> takedownAll -> compact, the generation-1
     // scans still carry the same plan-time PartitionFilters the
     // pristine q186 stores do
-    Search.resetDiskSearchMemo()
+    Stores.resetStoreMemos(spark)
     val plan = SparkEntry.queries("q187_coord_takedown")(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -444,7 +444,7 @@ class SearchIndexSpec extends SparkTestBase {
 
   test("q186 equals q170 row for row (three-store disk serve == " +
       "in-memory RAG pipeline)") {
-    Search.resetDiskSearchMemo()
+    Stores.resetStoreMemos(spark)
     val a = SparkEntry.queries("q186_rag_fuse_disk")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("q170_rag_fuse")(spark, sf)

@@ -296,6 +296,36 @@ class StoreFsckSpec extends SparkTestBase {
     assert(torn(idx).isEmpty, "a rebuild clears the torn-append marker")
   }
 
+  test("replayRepair of a torn append's batch clears that batch's " +
+      "pending marker; another batch's stays reported") {
+    def torn(idx: String): Map[String, (String, String)] =
+      fsckMap(idx, execute = false).filter(_._1.startsWith("torn append"))
+    val idx = tmp()
+    val store = Seq(Graft.ChunkSearchStore(idx))
+    val (seed, delta) = corpus.splitAt(4)
+    Search.searchIndexWrite(Search.chunkCorpus(seed.toDF("doc_id", "text")),
+      idx, idCol = "chunk_id", textCol = "chunk_text")
+    // an unpackable doc id passes the batch pin, then the chunker's
+    // raise_error fails the postings write after the pending marker
+    def tear(batch: Seq[(Long, String)], batchId: String): Unit =
+      intercept[Exception](Graft.appendAll(
+        (batch :+ ((Search.MaxChunkDocId, "omega"))).toDF("doc_id", "text"),
+        batchId, store))
+    tear(delta, "b1")
+    val b1 = torn(idx)
+    assert(b1.size == 1 && b1.head._2._1.contains("op=searchIndexAppend") &&
+        b1.head._2._1.contains("batch=b1"),
+      s"fsck must report the torn append: ${fsckMap(idx, execute = false)}")
+    tear(Seq((7L, "kappa lambda")), "b2")
+    assert(torn(idx).size == 2)
+    Graft.replayRepair(delta.toDF("doc_id", "text"), "b1", store)
+    val after = torn(idx)
+    assert(after.size == 1 && (after.keySet & b1.keySet).isEmpty,
+      s"the repaired batch's marker must go, b2's stay: $after")
+    assert(Search.searchIndexServe(spark, idx, Seq("rare"), topK = 10)
+      .count() == 1, "the repaired batch is served")
+  }
+
   test("ANN fsck deletes a torn compact scratch; the served top-k is " +
       "unchanged") {
     def codesDf =
